@@ -2,19 +2,24 @@
 
 Re-expression of the reference's transform stage
 (etl_pipeline/transform.py:131-244): ~15 sequential eager pandas passes
-become ONE lazy Spark plan. Step order is preserved exactly (P2 rename →
+become two lazy Spark plans. Step order is preserved exactly (P2 rename →
 J1 union → F1 trim → W1 dedup → F5 date parse → P5 drop bad dates →
 F12 median impute → F15 IQR clip → F16 min-max → F17 one-hot → F13 derived
 measures → F6/F7 date features → F14 buckets) because later steps read
-earlier steps' outputs (SURVEY §7.4.7), but Catalyst fuses every narrow
-step into a single projection — the only wide ops are the dedup window and
-the handful of 1-row stat aggregations collected to the driver.
+earlier steps' outputs (SURVEY §7.4.7).
 
-Driver-side scalars (medians, IQR bounds, min/max) mirror the reference's
-own pandas-computes/SQL-applies pattern (hold.ipynb:cell12) and keep the
-main plan free of extra shuffles: one `agg().first()` per stat batch, then
-literals. At 100 TB those stat passes share one scan each; everything else
-is narrow.
+- ``clean_sales`` is everything up to P5: the only wide op is the dedup
+  window. Its result is the one relation every later pass reads, so
+  ``pipeline.run_pipeline`` caches it there.
+- ``standardize_sales`` is everything after: narrow projections whose
+  constants (medians, IQR bounds, min/max, one-hot categories) come from
+  driver-side stat rows, the reference's own pandas-computes/SQL-applies
+  pattern (hold.ipynb:cell12). There are two stat passes, not four:
+  medians, min/max and the one-hot categories all read the cleaned rows
+  (min/max are unchanged by median imputation, since the median lies in
+  [min, max]; the categories are the distinct values plus ``'Unknown'``
+  when a value is NULL), so one aggregate computes them; the IQR bounds
+  read the imputed column, so they take the second pass.
 """
 
 from __future__ import annotations
@@ -44,6 +49,12 @@ NUMERIC_COLS = (
     "total_cost",
     "total_profit",
 )
+#: F12 median-imputed, F15 IQR-clipped, F16 min-max-scaled and F17 one-hot
+#: columns (transform.py:161-204)
+MEDIAN_COLS = ("units_sold", "unit_price", "unit_cost", "total_profit")
+CLIP_COLS = ("total_profit",)
+SCALE_COLS = ("units_sold", "total_revenue")
+ONE_HOT_COL = "order_priority"
 
 
 def union_sources(df_local: DataFrame, df_api: DataFrame) -> DataFrame:
@@ -129,35 +140,6 @@ def flag_outliers_iqr(
     return df.withColumn(flag_col, (F.col(col) > F.lit(thr)).cast("int"))
 
 
-def min_max_scale(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    """F16/A15: append {col}_norm ∈ [0,1] (transform.py:62-73,190-195)."""
-    present = [c for c in cols if c in df.columns]
-    if not present:
-        return df
-    bounds = df.agg(
-        *[F.min(c).alias(f"{c}_mn") for c in present],
-        *[F.max(c).alias(f"{c}_mx") for c in present],
-    ).first()
-    return df.withColumns(
-        {
-            f"{c}_norm": min_max_norm(F.col(c), bounds[f"{c}_mn"], bounds[f"{c}_mx"])
-            for c in present
-            if bounds[f"{c}_mn"] is not None
-        }
-    )
-
-
-def one_hot(df: DataFrame, col: str = "order_priority", prefix: str | None = None) -> DataFrame:
-    """F17: pd.get_dummies(drop_first=True) reproduction — sorted distinct
-    categories from a driver-side collect (low-cardinality by contract)."""
-    if col not in df.columns:
-        return df
-    cats = sorted(
-        r[0] for r in df.select(col).distinct().collect() if r[0] is not None
-    )
-    return df.select("*", *one_hot_exprs(F.col(col), cats, prefix or col))
-
-
 def derive_sales_features(df: DataFrame) -> DataFrame:
     """F13 + F6/F7 + F14 + F11: derived measures, date features, buckets —
     one projection (the reference's 5 UPDATEs + pandas chain fused)."""
@@ -189,19 +171,51 @@ def derive_sales_features(df: DataFrame) -> DataFrame:
     )
 
 
-def transform_sales(df_local: DataFrame, df_api: DataFrame) -> DataFrame:
-    """§2.10 composite: the full reference transform chain
-    (transform.py:131-244) as one lazy plan. Returns the standardized
-    19+-column sales table."""
+def clean_sales(df_local: DataFrame, df_api: DataFrame) -> DataFrame:
+    """P2 → J1 → F1 → W1 → F5 → P5: the deduplicated, date-valid sales rows
+    (still carrying ``source_rank``)."""
     df = union_sources(normalize_names(df_local), normalize_names(df_api))
     df = clean_categories(df)
     df = dedup_keep_first(df)
     df = parse_sales_dates(df)
-    df = drop_null_order_dates(df)
-    df = impute_numeric_median(df, ("units_sold", "unit_price", "unit_cost", "total_profit"))
+    return drop_null_order_dates(df)
+
+
+def standardize_sales(df: DataFrame) -> DataFrame:
+    """F12 → F15 → F16 → F17 → F13/F6/F7/F14 over ``clean_sales`` output,
+    with two stat passes (see module docstring)."""
+    median = [c for c in MEDIAN_COLS if c in df.columns]
+    scale = [c for c in SCALE_COLS if c in df.columns]
+    onehot = ONE_HOT_COL in df.columns
+    aggs = [F.expr(f"percentile({c}, 0.5)").alias(f"{c}_med") for c in median]
+    aggs += [F.min(c).alias(f"{c}_mn") for c in scale]
+    aggs += [F.max(c).alias(f"{c}_mx") for c in scale]
+    if onehot:
+        aggs += [
+            F.collect_set(ONE_HOT_COL).alias("cats"),
+            F.count(F.when(F.col(ONE_HOT_COL).isNull(), 1)).alias("cat_nulls"),
+        ]
+    stats = df.agg(*aggs).first() if aggs else None
+
+    df = df.fillna({c: stats[f"{c}_med"] for c in median if stats[f"{c}_med"] is not None})
     df = fill_unknown_categories(df)
-    df = clip_outliers_iqr(df, ("total_profit",))
-    df = min_max_scale(df, ("units_sold", "total_revenue"))
-    df = one_hot(df, "order_priority")
+    df = clip_outliers_iqr(df, CLIP_COLS)
+    df = df.withColumns(
+        {
+            f"{c}_norm": min_max_norm(F.col(c), stats[f"{c}_mn"], stats[f"{c}_mx"])
+            for c in scale
+            if stats[f"{c}_mn"] is not None
+        }
+    )
+    if onehot:
+        cats = set(stats["cats"]) | ({"Unknown"} if stats["cat_nulls"] else set())
+        df = df.select("*", *one_hot_exprs(F.col(ONE_HOT_COL), list(cats), ONE_HOT_COL))
     df = derive_sales_features(df)
     return df.drop("source_rank")
+
+
+def transform_sales(df_local: DataFrame, df_api: DataFrame) -> DataFrame:
+    """§2.10 composite: the full reference transform chain
+    (transform.py:131-244). Returns the standardized 19+-column sales
+    table."""
+    return standardize_sales(clean_sales(df_local, df_api))

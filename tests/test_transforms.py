@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_etl_elt_dashboard_spark.functions.cleaning import (
@@ -171,3 +172,93 @@ def test_snapshot_delta_classifies_and_encodes_nulls(spark):
         5: "delete",
         6: "insert",
     }
+
+
+# -- fused-stat parity ------------------------------------------------------
+# The oracle runs the reference chain one step per pass: each step's stats
+# come from its own aggregate over the previous step's output. The fused
+# transform_sales must give the same table from two stat passes.
+
+
+def _oracle_min_max_scale(df, cols):
+    bounds = df.agg(
+        *[F.min(c).alias(f"{c}_mn") for c in cols],
+        *[F.max(c).alias(f"{c}_mx") for c in cols],
+    ).first()
+    return df.withColumns(
+        {
+            f"{c}_norm": min_max_norm(F.col(c), bounds[f"{c}_mn"], bounds[f"{c}_mx"])
+            for c in cols
+            if bounds[f"{c}_mn"] is not None
+        }
+    )
+
+
+def _oracle_one_hot(df, col):
+    cats = sorted(r[0] for r in df.select(col).distinct().collect() if r[0] is not None)
+    return df.select("*", *one_hot_exprs(F.col(col), cats, col))
+
+
+def _oracle_transform_sales(local, api):
+    from bigdata_etl_elt_dashboard_spark.functions.cleaning import normalize_names
+
+    df = TR.union_sources(normalize_names(local), normalize_names(api))
+    df = TR.clean_categories(df)
+    df = TR.dedup_keep_first(df)
+    df = TR.parse_sales_dates(df)
+    df = TR.drop_null_order_dates(df)
+    df = TR.impute_numeric_median(df, ("units_sold", "unit_price", "unit_cost", "total_profit"))
+    df = TR.fill_unknown_categories(df)
+    df = TR.clip_outliers_iqr(df, ("total_profit",))
+    df = _oracle_min_max_scale(df, ("units_sold", "total_revenue"))
+    df = _oracle_one_hot(df, "order_priority")
+    df = TR.derive_sales_features(df)
+    return df.drop("source_rank")
+
+
+def _edge_rows(case):
+    """Small clean sources, each bent to exercise one fused-stat edge."""
+    rows = [
+        ("Europe", "France", "Fruit", "Online", "H", "1/5/2020", 1, "1/8/2020", 1, 2.0, 1.0, 10.0, 5.0, 5.0),
+        ("Europe", "Spain", "Meat", "Offline", "L", "2/5/2020", 2, "2/9/2020", 2, 3.0, 1.0, 20.0, 8.0, 12.0),
+        ("Asia", "Japan", "Fruit", "Online", "M", "3/5/2020", 3, "3/7/2020", 3, 4.0, 2.0, 30.0, 9.0, 21.0),
+        ("Asia", "China", "Cereal", "Offline", "C", "4/5/2020", 4, "4/6/2020", 4, 5.0, 2.0, 40.0, 20.0, 20.0),
+    ]
+    rows = [list(r) for r in rows]
+    if case == "null_priority":
+        rows[1][4] = None  # 'Unknown' joins the one-hot categories
+    elif case == "fractional_median":
+        rows.append(["Africa", "Kenya", "Meat", "Online", "H", "5/5/2020", 5, "5/6/2020", None, 2.0, 1.0, None, 3.0, 1.0])
+    elif case == "null_profit":
+        for r in rows:
+            r[13] = None  # no median to fill, no quartiles to clip to
+    elif case == "constant_revenue":
+        for r in rows:
+            r[11] = 25.0  # min == max → a 0.0 norm
+    return [tuple(r) for r in rows]
+
+
+@pytest.mark.parametrize(
+    "case", ["planted", "null_priority", "fractional_median", "null_profit", "constant_revenue"]
+)
+def test_transform_sales_matches_step_per_pass_oracle(spark, case):
+    from bigdata_etl_elt_dashboard_spark.schemas import SALES_RAW
+
+    if case == "planted":
+        local, api = sales_sources(spark)
+    else:
+        local = spark.createDataFrame(_edge_rows(case), SALES_RAW)
+        api = spark.createDataFrame([], SALES_RAW)
+    got = TR.transform_sales(local, api)
+    want = _oracle_transform_sales(local, api)
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    if case == "null_priority":
+        assert "order_priority_Unknown" in got.columns
+    if case == "fractional_median":
+        row = got.filter(F.col("order_id") == 5).first()
+        assert row["units_sold"] == 2  # median 2.5 cast into the int column
+    if case == "null_profit":
+        assert got.filter(F.col("total_profit").isNull()).count() == 0  # recomputed, not filled
+    if case == "constant_revenue":
+        assert {r[0] for r in got.select("total_revenue_norm").collect()} == {0.0}

@@ -115,15 +115,13 @@ EXTENSION_SUITE = (
     "sim_ann_recall_digest",
     "dedup_method_agreement",
     # round-5 additions: the new sketch/graph/experiment/warehouse queries
-    # (regression tripwires from their first round), plus sim_ann_lsh now
-    # that its corpus scan is pinned single-pass
+    # (regression tripwires from their first round)
     "stat_hll_distinct_custkeys",
     "graph_label_propagation",
     "ev_ab_test_conversion",
     "ev_funnel_time_window",
     "src_schema_evolution_digest",
     "wh_late_arriving_dim",
-    "sim_ann_lsh",
     "supplier_return_blame",
     "emb_jl_projection_distortion",
     "text_token_fertility_by_lang",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import IntegralType
 
 
 def _as_double(vec: Column) -> Column:
@@ -32,27 +33,36 @@ def _as_double(vec: Column) -> Column:
 EMBEDDING_DIM = 64
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+def _quoted(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier: the whole string is
+    the column name, so spaces, dots and backticks cannot re-parse it."""
+    if not isinstance(name, str):
+        raise TypeError(
+            "the unrolled dot/norm (dim given) is SQL text and takes column "
+            f"names, not {type(name).__name__}"
+        )
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     """Σ aᵢ·bᵢ, sequential array-order summation — deterministic and
     oracle-reproducible; both forms sum in identical left-associative
     order (0.0 + t is exact), so they hash-match each other.
 
-    With ``dim`` given, the sum is UNROLLED into a flat expression chain
-    (a[0]·b[0] + a[1]·b[1] + …). WHICH FORM IS FASTER DEPENDS ON THE
-    CONSUMER (round-3 measurement): in small/bounded projections the
-    unrolled chain compiles into one whole-stage-codegen span and wins;
-    in a WIDE pair-join projection the oversized generated method trips
-    codegen FALLBACK and the ~600-node tree evaluates interpreted per
-    pair — 10× slower than the higher-order ``aggregate`` form, whose
-    ArrayAggregate loop is compact and JIT-friendly. Use dim=None (HOF)
-    for quadratic/pair-stream kernels (see near_dup_pairs), dim=N for
-    bounded query-broadcast kernels. Requires every array to actually
-    have ``dim`` elements when unrolled."""
+    With ``dim`` given, ``a`` and ``b`` are column names and the sum is
+    UNROLLED into a flat chain ``a[0] * b[0] + a[1] * b[1] + …``, parsed
+    from one SQL string: Catalyst gets the same tree a Column-by-Column
+    build gives, without one Python-to-JVM call per term (a 64-dim
+    cosine is ~9k of them). Which form is faster depends on the
+    consumer: in small, bounded projections the unrolled chain compiles
+    into one whole-stage-codegen span and wins; in a wide pair-join
+    projection the oversized generated method falls back to
+    interpretation and the higher-order ``aggregate`` form (dim=None,
+    any Column) is ~10× faster. Unrolled, every array must have ``dim``
+    elements."""
     if dim is not None:
-        expr = a[0] * b[0]
-        for i in range(1, dim):
-            expr = expr + a[i] * b[i]
-        return expr
+        qa, qb = _quoted(a), _quoted(b)
+        return F.expr(" + ".join(f"{qa}[{i}] * {qb}[{i}]" for i in range(dim)))
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -60,13 +70,13 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
+def norm(a: Column | str, dim: int | None = None) -> Column:
     if dim is not None:
         return F.sqrt(dot(a, a, dim))
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     return dot(a, b, dim) / F.nullif(norm(a, dim) * norm(b, dim), F.lit(0.0))
 
 
@@ -96,17 +106,17 @@ def topk_cosine(
     # generated method too large to compile (Janino bails, Spark interprets)
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("_nq", norm(F.col("q_vec"), EMBEDDING_DIM))
+    ).withColumn("_nq", norm("q_vec", EMBEDDING_DIM))
     c = _fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-    ).withColumn("_nc", norm(F.col("c_vec"), EMBEDDING_DIM))
+    ).withColumn("_nc", norm("c_vec", EMBEDDING_DIM))
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
             F.round(
-                dot(F.col("q_vec"), F.col("c_vec"), EMBEDDING_DIM)
+                dot("q_vec", "c_vec", EMBEDDING_DIM)
                 / F.nullif(F.col("_nq") * F.col("_nc"), F.lit(0.0)),
                 6,
             ).alias("cosine_sim"),
@@ -131,17 +141,17 @@ def threshold_cosine_pairs(
     embedding-cosine near-dup primitive (no rank cutoff → no tie hazard)."""
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("_nq", norm(F.col("q_vec"), EMBEDDING_DIM))
+    ).withColumn("_nq", norm("q_vec", EMBEDDING_DIM))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-    ).withColumn("_nc", norm(F.col("c_vec"), EMBEDDING_DIM))
+    ).withColumn("_nc", norm("c_vec", EMBEDDING_DIM))
     return (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",
             F.round(
-                dot(F.col("q_vec"), F.col("c_vec"), EMBEDDING_DIM)
+                dot("q_vec", "c_vec", EMBEDDING_DIM)
                 / F.nullif(F.col("_nq") * F.col("_nc"), F.lit(0.0)),
                 6,
             ).alias("cosine_sim"),
@@ -151,8 +161,8 @@ def threshold_cosine_pairs(
 
 
 def _block_pair_scorer(min_sim: float):
-    """Cogrouped NumPy scorer for one (block_i, block_j) pair — the Arrow
-    block-matrix replacement (r15, guide §4.2) for the per-pair JVM HOF dot.
+    """Cogrouped NumPy scorer for one (block_i, block_j) pair: the Arrow
+    block-matrix form of the per-pair JVM HOF dot.
 
     BIT-EXACTNESS ARGUMENT (why this hashes identically to the HOF form):
     the JVM kernel computed, per pair, ``aggregate(zip_with(a, b, (x,y) ->
@@ -262,6 +272,16 @@ def _block_pair_scorer(min_sim: float):
     return score
 
 
+def _n_blocks(parallelism: int) -> int:
+    """Block count for `near_dup_pairs`: the smallest B whose B(B+1)/2
+    block-pair groups fill ``parallelism`` task slots (1 → 1, 4 → 3,
+    32 → 8)."""
+    b = 1
+    while b * (b + 1) // 2 < parallelism:
+        b += 1
+    return b
+
+
 def near_dup_pairs(
     corpus: DataFrame,
     min_sim: float,
@@ -270,37 +290,42 @@ def near_dup_pairs(
 ) -> DataFrame:
     """Exact all-pairs embedding-cosine near-dup: every (a, b) with a < b
     and cosine ≥ min_sim, over the WHOLE corpus (not a query subset).
+    ``id_col`` must be integral; the output ids ``doc_a``/``doc_b`` are
+    ``long``. Any other id type raises ``TypeError``.
 
     Shape: BLOCKED pair enumeration, never a nested loop. Each vector
-    lands in one of ``n_blocks`` hash blocks; the left replica carries
-    keys (own_block, j ≥ own_block), the right replica (i ≤ own_block,
-    own_block), so every unordered block pair meets on exactly one (i, j)
-    key. Block-pair keys are near-uniform by construction (hash blocks),
-    so the n² work spreads evenly across B(B+1)/2 tasks; at 100 TB grow
-    ``n_blocks`` with the cluster.
+    lands in one of B hash blocks; the left replica carries keys
+    (own_block, j) for j in own_block..B-1, the right replica (i,
+    own_block) for i in 0..own_block, so every unordered block pair meets
+    on exactly one (i, j) key. B is the smallest count whose B(B+1)/2
+    groups fill the session's default parallelism (`_n_blocks`): each
+    group is one call of the Python kernel, and past one group per core
+    more groups add per-call and per-task overhead, not parallelism. The
+    pair set does not depend on B, because the kernel scores each pair
+    bit-exactly wherever it meets.
 
-    Kernel form (r15, guide §4.2 — third generation): the pair scoring is
-    a COGROUPED ARROW/NumPy BLOCK-MATRIX kernel (`_block_pair_scorer`).
-    History: round 3 proved the unrolled 64-term JVM chain trips codegen
-    fallback (10× slower interpreted); round 14 measured the surviving
-    HOF ``aggregate`` form at ~0.6 s of the query's 1.45 s noop — a
-    per-pair ArrayAggregate lambda walk the JVM cannot vectorize. The
-    NumPy kernel does the identical arithmetic on whole block matrices
-    (one multiply-add sweep per dimension), with the bit-exactness vs the
-    sequential fold argued in `_block_pair_scorer`'s docstring. Each
-    vector crosses the Arrow boundary ~(B+2)/2 times as a *replica of a
-    64-double row* (~18 MiB total at sf0.1) instead of the JVM join
-    materializing a 2M-pair × 128-double projection; the JVM keeps the
-    round(·, 6) + threshold filter, so NULL/NaN/rounding semantics are
-    decided by Spark exactly as before."""
-    n_blocks = 16
-    keys = [(i, j) for i in range(n_blocks) for j in range(n_blocks) if i <= j]
+    The scoring is a cogrouped Arrow/NumPy block-matrix kernel
+    (`_block_pair_scorer`): one multiply-add sweep per dimension over
+    whole block matrices, bit-identical to the sequential ``aggregate``
+    fold. The JVM keeps the round(·, 6) + threshold filter, so
+    NULL/NaN/rounding semantics are Spark's.
 
-    pair_structs = F.array(
-        *[F.struct(F.lit(i).alias("i"), F.lit(j).alias("j")) for i, j in keys]
-    )
-    left_keys = F.filter(pair_structs, lambda s: s["i"] == F.col("_blk"))
-    right_keys = F.filter(pair_structs, lambda s: s["j"] == F.col("_blk"))
+    A caller that sorts the result should put a stage boundary (a hash
+    exchange) between this and its ``orderBy``. The sort's range
+    partitioner draws its bounds from a sample job over the sort's input;
+    with no shuffle in between, that input is the kernel stage itself, so
+    every group ran twice per collect. With the boundary AQE materializes
+    the kernel output once and the sample reads shuffle files (see
+    ``dedup_embedding_cosine``). The boundary belongs at the sorting
+    query, not here: a caller that joins or aggregates the pairs would
+    only gain an exchange."""
+    id_type = corpus.select(id_col).schema[0].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"near_dup_pairs: id column {id_col!r} is {id_type.simpleString()}; "
+            "it must be an integral type (the pair ids are emitted as long)"
+        )
+    n_blocks = _n_blocks(corpus.sparkSession.sparkContext.defaultParallelism)
 
     # null-element vectors: the HOF dot made every pair involving one NULL
     # (zip_with product NULL → fold NULL → filter drops); np.float64 cannot
@@ -311,7 +336,7 @@ def near_dup_pairs(
         F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
     ).filter(~F.exists(F.col("_v"), lambda x: x.isNull()))
 
-    def side(key_exprs):
+    def side(ki, kj):
         # every output column is re-ALIASED so each side() call mints fresh
         # attribute ids: left and right both derive from `base`, and a
         # self-cogroup whose sides share ids breaks under column pruning —
@@ -319,17 +344,20 @@ def near_dup_pairs(
         # references (captured before dedup) then all resolve to the LEFT,
         # and an enclosing count()/agg prunes the right side down to its
         # grouping keys (observed: right pdf = [_ki, _kj] only).
-        return base.withColumn("_k", F.explode(key_exprs)).select(
-            F.col("_k.i").alias("_ki"),
-            F.col("_k.j").alias("_kj"),
+        return base.select(
+            ki.alias("_ki"),
+            kj.alias("_kj"),
             F.col("_id").alias("_id"),
             F.col("_v").alias("_v"),
         )
 
+    blk = F.col("_blk")
     scored = (
-        side(left_keys)
+        side(blk, F.explode(F.sequence(blk, F.lit(n_blocks - 1))))
         .groupBy("_ki", "_kj")
-        .cogroup(side(right_keys).groupBy("_ki", "_kj"))
+        .cogroup(
+            side(F.explode(F.sequence(F.lit(0), blk)), blk).groupBy("_ki", "_kj")
+        )
         .applyInPandas(
             _block_pair_scorer(min_sim), "doc_a long, doc_b long, _raw double"
         )
@@ -392,7 +420,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec"), EMBEDDING_DIM), 6).alias("cosine_sim"),
+            F.round(cosine("q_vec", "c_vec", EMBEDDING_DIM), 6).alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
@@ -592,7 +620,7 @@ def ann_lsh_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec"), EMBEDDING_DIM), 6).alias("cosine_sim"),
+            F.round(cosine("q_vec", "c_vec", EMBEDDING_DIM), 6).alias("cosine_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))

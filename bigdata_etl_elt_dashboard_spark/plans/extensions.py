@@ -620,7 +620,14 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    return S.near_dup_pairs(emb, min_sim=0.4).orderBy("doc_a", "doc_b")
+    # the hash exchange is a stage boundary: AQE materializes the kernel's
+    # output once and the sort's range-partition sample reads it, instead of
+    # re-running the Python kernel to draw the sample
+    return (
+        S.near_dup_pairs(emb, min_sim=0.4)
+        .repartition("doc_a")
+        .orderBy("doc_a", "doc_b")
+    )
 
 
 @register(

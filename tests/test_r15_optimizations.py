@@ -225,7 +225,7 @@ def _pre_r15_semdedup(emb):
     v = S._fan_out(emb).select(
         "label", "vec_id", S._as_double(F.col("embedding")).alias("ve")
     )
-    v = v.withColumn("_nrm", S.norm(F.col("ve"), S.EMBEDDING_DIM))
+    v = v.withColumn("_nrm", S.norm("ve", S.EMBEDDING_DIM))
     a = v.select(
         F.col("label"), F.col("vec_id").alias("_aid"),
         F.col("ve").alias("_ave"), F.col("_nrm").alias("_an"),
@@ -235,7 +235,7 @@ def _pre_r15_semdedup(emb):
         F.col("ve").alias("_bve"), F.col("_nrm").alias("_bn"),
     )
     cos = F.round(
-        S.dot(F.col("_ave"), F.col("_bve"), S.EMBEDDING_DIM)
+        S.dot("_ave", "_bve", S.EMBEDDING_DIM)
         / F.nullif(F.col("_an") * F.col("_bn"), F.lit(0.0)),
         6,
     )

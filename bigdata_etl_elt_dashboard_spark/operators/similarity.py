@@ -18,10 +18,14 @@ engines and between SIMD paths, so we standardize on double.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.types import IntegralType
+
+from .kernels import inorder_dot, unpack
 
 
 def _as_double(vec: Column) -> Column:
@@ -162,27 +166,13 @@ def threshold_cosine_pairs(
 
 def _block_pair_scorer(min_sim: float):
     """Cogrouped NumPy scorer for one (block_i, block_j) pair: the Arrow
-    block-matrix form of the per-pair JVM HOF dot.
-
-    BIT-EXACTNESS ARGUMENT (why this hashes identically to the HOF form):
-    the JVM kernel computed, per pair, ``aggregate(zip_with(a, b, (x,y) ->
-    x*y), 0.0, (acc,t) -> acc + t)`` — a left-associative fold
-    ``((0.0 + a0·b0) + a1·b1) + …`` over IEEE-754 doubles. Here the dot
-    matrix is accumulated as ``C += A[:,k,None] * B[None,:,k]`` for
-    k = 0..dim-1 IN ORDER: every element of C experiences exactly the
-    same multiply-then-add sequence (NumPy elementwise ufuncs perform one
-    correctly-rounded IEEE operation per element — no FMA contraction, no
-    pairwise/reassociated reduction, which only np.sum/np.dot use), and
-    the 0.0 + first-product step is exact in both. Norms accumulate
-    ``x*x`` the same way (the HOF ``aggregate(a, 0.0, acc + x*x)``),
-    sqrt is correctly rounded in both runtimes, and the final division
-    is a single IEEE op on identical operands. Rounding and the
-    ≥ min_sim filter stay in the JVM (Spark's HALF_UP `round` and its
-    NaN-greatest comparison semantics are NOT replicated here): the
-    kernel emits RAW cosines for a strict superset — everything with
-    cos ≥ min_sim − 1e-6 (round(·, 6) moves a value by < 5e-7) plus any
-    NaN (Spark treats NaN as the largest double, so the JVM filter must
-    decide those).
+    block-matrix form of the per-pair JVM HOF dot, bit-exact with it
+    (`kernels.inorder_dot`). Rounding and the ≥ min_sim filter stay in
+    the JVM (Spark's HALF_UP `round` and its NaN-greatest comparison are
+    NOT replicated here): the kernel emits RAW cosines for a strict
+    superset — everything with cos ≥ min_sim − 1e-6 (round(·, 6) moves a
+    value by < 5e-7) plus any NaN (Spark treats NaN as the largest
+    double, so the JVM filter must decide those).
 
     Semantics preserved per pair class:
     - same-block groups (ki == kj): both replicas hold the same rows;
@@ -197,52 +187,17 @@ def _block_pair_scorer(min_sim: float):
     """
 
     def score(left, right):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "doc_a": pd.Series(dtype="int64"),
-                "doc_b": pd.Series(dtype="int64"),
-                "_raw": pd.Series(dtype="float64"),
-            }
-        )
         if not len(left) or not len(right):
-            return empty
+            return pd.DataFrame()
         same_block = bool(left["_ki"].iat[0] == left["_kj"].iat[0])
-
-        def by_len(pdf):
-            groups: dict = {}
-            for vid, vec in zip(pdf["_id"], pdf["_v"]):
-                arr = np.asarray(vec, dtype=np.float64)
-                ids, rows = groups.setdefault(arr.shape[0], ([], []))
-                ids.append(vid)
-                rows.append(arr)
-            return {
-                ln: (
-                    np.asarray(ids, dtype=np.int64),
-                    np.vstack(rows) if ln else np.empty((len(rows), 0)),
-                )
-                for ln, (ids, rows) in groups.items()
-            }
-
-        la, ra = by_len(left), by_len(right)
+        la, ra = unpack(left["_v"], left["_id"]), unpack(right["_v"], right["_id"])
         out_a, out_b, out_c = [], [], []
         for ln, (ids_a, A) in la.items():
             if ln not in ra:
                 continue
             ids_b, B = ra[ln]
-            na, nb = len(ids_a), len(ids_b)
-            # dot/norm accumulated in array-index order — see the
-            # bit-exactness argument in the docstring
-            C = np.zeros((na, nb))
-            sq_a = np.zeros(na)
-            sq_b = np.zeros(nb)
-            for k in range(ln):
-                C += A[:, k, None] * B[None, :, k]
-                sq_a += A[:, k] * A[:, k]
-                sq_b += B[:, k] * B[:, k]
-            denom = np.sqrt(sq_a)[:, None] * np.sqrt(sq_b)[None, :]
+            C = inorder_dot(A[:, None, :], B[None, :, :])
+            denom = np.sqrt(inorder_dot(A, A))[:, None] * np.sqrt(inorder_dot(B, B))
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = C / denom
             ia = ids_a[:, None]
@@ -260,7 +215,7 @@ def _block_pair_scorer(min_sim: float):
                 out_b.append(np.maximum(da, db))
                 out_c.append(cos[ii, jj])
         if not out_a:
-            return empty
+            return pd.DataFrame()
         return pd.DataFrame(
             {
                 "doc_a": np.concatenate(out_a),
@@ -463,26 +418,22 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 
 
 def _lsh_sig_kernel(planes: list[list[float]], planes_per_table: int, id_name: str):
-    """mapInPandas signature kernel (r15, guide §4.2): per input vector, the
-    sign-bit signature of every hash table in one NumPy sweep, replacing the
-    96-row-per-vector broadcast crossJoin whose per-(vector, plane) HOF dot
-    evaluated interpreted (ArrayAggregate never codegens).
+    """mapInPandas signature kernel: per input vector, the sign-bit
+    signature of every hash table in one NumPy sweep.
 
-    Exactness mirrors the JVM path bit-for-bit where it matters:
-    - each dot accumulates in coordinate order (same IEEE sequence as the
-      ``aggregate`` fold — see `_block_pair_scorer`), and ``-0.0 >= 0`` is
-      true in both runtimes, so every sign bit matches;
-    - a NULL element/vector made the JVM dot NULL → ``when(dot >= 0, …)``
-      fell to the 0-bit; NULLs arrive here as NaN, and ``NaN >= 0`` is
-      False in NumPy → same 0-bit;
-    - vectors whose length differs from the plane width zip_with-padded to
-      NULL dots → all-zero signatures; the kernel gives non-conforming
-      rows all-zero bits likewise."""
+    Exactness mirrors the JVM HOF form bit-for-bit where it matters:
+    - each dot accumulates in coordinate order (`kernels.inorder_dot`),
+      and ``-0.0 >= 0`` is true in both runtimes, so every sign bit
+      matches;
+    - a NULL element made the JVM dot NULL → ``when(dot >= 0, …)`` fell
+      to the 0-bit; NULLs arrive here as NaN, and ``NaN >= 0`` is False
+      in NumPy → same 0-bit;
+    - a NULL vector, or one whose length differs from the plane width,
+      zip_with-padded to NULL dots → all-zero signature; the kernel
+      scores only the plane-width group and leaves every other row's
+      bits zero."""
 
     def compute(it):
-        import numpy as np
-        import pandas as pd
-
         P = np.asarray(planes, dtype=np.float64)
         n_tables = P.shape[0] // planes_per_table
         weights = (1 << np.arange(planes_per_table)).astype(np.int64)
@@ -492,22 +443,11 @@ def _lsh_sig_kernel(planes: list[list[float]], planes_per_table: int, id_name: s
             ids = pdf[id_name].to_numpy()
             n = len(ids)
             bits = np.zeros((n, P.shape[0]), dtype=bool)
-            vecs = list(pdf["_v"])
-            ok = np.array(
-                [v is not None and len(v) == P.shape[1] for v in vecs]
-            )
-            if ok.any():
-                V = np.vstack(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v, o in zip(vecs, ok)
-                        if o
-                    ]
-                )
-                D = np.zeros((V.shape[0], P.shape[0]))
-                for kk in range(P.shape[1]):
-                    D += V[:, kk, None] * P[None, :, kk]
-                bits[ok] = D >= 0  # NaN → False: the JVM NULL-dot 0-bit
+            rows = unpack(pdf["_v"], np.arange(n)).get(P.shape[1])
+            if rows is not None:
+                pos, V = rows
+                # NaN → False: the JVM NULL-dot 0-bit
+                bits[pos] = inorder_dot(V[:, None, :], P[None, :, :]) >= 0
             frames = {
                 id_name: np.tile(ids, n_tables),
                 "table_id": np.repeat(
@@ -551,13 +491,9 @@ def ann_lsh_topk(
     from .scale import pin
 
     all_planes = _hyperplanes(dim, n_tables * planes_per_table)
-    # Plane-constant history: plan LITERALS (r03) built a multi-thousand-
-    # node expression tree Catalyst re-walked per rule (tens of seconds of
-    # plan time); a 96-row broadcast DataFrame (r05–r14) fixed plan time
-    # but left one interpreted HOF dot per (vector, plane) row; since r15
-    # the planes ride as a NumPy constant inside the Arrow signature
-    # kernel — zero plan nodes, one vectorized sweep per batch.
-    # the corpus feeds BOTH the signature build and the post-candidate
+    # the planes ride as a NumPy constant inside the signature kernel
+    # (`_lsh_sig_kernel`): no plan nodes, one vectorized sweep per batch.
+    # The corpus feeds BOTH the signature build and the post-candidate
     # vector re-attach: pin the (id, vec) projection once instead of two
     # full parquet scans (the cast/fan_out work also runs once)
     base = (
@@ -567,12 +503,9 @@ def ann_lsh_topk(
     )
 
     def with_sigs(v, id_alias):
-        # r15 (guide §4.2): all n_tables signatures per vector from ONE
-        # NumPy sweep (see _lsh_sig_kernel) instead of the 96-way plane
-        # crossJoin with interpreted per-row HOF dots. The id-keyed
-        # groupBy-sum stays: it reproduces the old bitval aggregation
-        # exactly (including the duplicate-id summing semantics) and its
-        # input is n_tables rows per vector, not n_tables×bits.
+        # all n_tables signatures per vector from one kernel sweep; the
+        # id-keyed groupBy-sum reproduces the per-plane bit aggregation
+        # exactly (duplicate ids sum) over n_tables rows per vector.
         raw = v.select(id_alias, "_v").mapInPandas(
             _lsh_sig_kernel(all_planes, planes_per_table, id_alias),
             f"{id_alias} long, table_id int, sig long",

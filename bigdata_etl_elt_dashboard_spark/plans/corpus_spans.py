@@ -29,10 +29,13 @@ cosine rounds to 6 dp on both engines before the threshold test.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
+from ..operators.kernels import KernelInputError, inorder_dot, unpack
 from ..operators import text as X
 from ..sources.catalog import table
 from .extensions import _TOKS_SQL
@@ -291,50 +294,39 @@ def docs_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 def _semdedup_max_cos_kernel(dim: int):
     """Grouped NumPy kernel: per label block, for every vector a the MAX
     cosine against lower-id same-label vectors b, over the first ``dim``
     coordinates (the unrolled-dot contract). One output row per vector
     that has at least one scorable lower-id neighbor.
 
-    Exactness: the dot/norm sweeps accumulate in coordinate order — the
-    same IEEE multiply-add sequence as the unrolled JVM chain (NumPy
-    elementwise ufuncs, no FMA, no reassociation); see
-    operators.similarity._block_pair_scorer for the full argument. The
-    max is over bit-exact cosines and round() is monotone nondecreasing,
-    so the JVM's round(max_cos, 6) >= tau decides exactly the original
-    per-pair EXISTS. Zero-norm neighbors are masked out (the nullif guard
-    made those pairs NULL — never pruning); NaN cosines (NaN inputs)
-    propagate through the max so the JVM's NaN-greatest comparison keeps
-    deciding them."""
+    Every vector must have at least ``dim`` elements: a shorter one
+    raises `KernelInputError` naming the row, as the unrolled dot's ANSI
+    ``a[i]`` access did. Exactness: the dot and norm sweeps are
+    `kernels.inorder_dot`, the same IEEE multiply-add sequence as the
+    unrolled JVM chain. The max is over bit-exact cosines and round() is
+    monotone nondecreasing, so the JVM's round(max_cos, 6) >= tau decides
+    exactly the original per-pair EXISTS. Zero-norm neighbors are masked
+    out (the nullif guard made those pairs NULL — never pruning); NaN
+    cosines (NaN inputs) propagate through the max so the JVM's
+    NaN-greatest comparison keeps deciding them."""
 
     def compute(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "label": pd.Series(dtype="int32"),
-                "vec_id": pd.Series(dtype="int64"),
-                "max_cos": pd.Series(dtype="float64"),
-            }
-        )
+        groups = unpack(pdf["embedding"], pdf["vec_id"])
+        for ln, (g_ids, M) in groups.items():
+            if ln < dim:
+                raise KernelInputError(
+                    "embedding", g_ids[0], M[0].tolist(),
+                    f"has {ln} elements; the cosine reads the first {dim}",
+                )
         if len(pdf) < 2:
-            return empty
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        X = np.vstack([np.asarray(v, dtype=np.float64)[:dim] for v in pdf["ve"]])[
-            order
-        ]
-        n = len(ids)
-        C = np.zeros((n, n))
-        sq = np.zeros(n)
-        for k in range(dim):
-            C += X[:, k, None] * X[None, :, k]
-            sq += X[:, k] * X[:, k]
-        nrm = np.sqrt(sq)
+            return pd.DataFrame()
+        ids = np.concatenate([g_ids for g_ids, _ in groups.values()])
+        X = np.vstack([M[:, :dim] for _, M in groups.values()])
+        order = np.argsort(ids, kind="stable")
+        ids, X = ids[order], X[order]
+        C = inorder_dot(X[:, None, :], X[None, :, :])
+        nrm = np.sqrt(inorder_dot(X, X))
         denom = nrm[:, None] * nrm[None, :]
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = C / denom
@@ -343,7 +335,7 @@ def _semdedup_max_cos_kernel(dim: int):
         mx = vals.max(axis=1)
         keep = (mx > -np.inf) | np.isnan(mx)
         if not keep.any():
-            return empty
+            return pd.DataFrame()
         return pd.DataFrame(
             {
                 "label": np.full(int(keep.sum()), pdf["label"].iat[0], dtype="int32"),
@@ -353,6 +345,48 @@ def _semdedup_max_cos_kernel(dim: int):
         )
 
     return compute
+
+
+def semdedup_prune(emb: DataFrame) -> DataFrame:
+    """Per label of an ``embeddings`` frame (``label``, ``vec_id``,
+    ``embedding``): ``n_vecs``, and how many vectors SemDeDup removes and
+    keeps.
+
+    The per-label quadratic cosine runs in one grouped kernel
+    (`_semdedup_max_cos_kernel`) that emits ONE ROW PER VECTOR, not per
+    pair: a is pruned iff EXISTS b < a with round(cos, 6) >= tau, and
+    round is monotone nondecreasing, so that equals round(MAX cos) >= tau
+    — the kernel emits max_b cos(a, b) and the JVM applies the original
+    predicate to it. The pre-filters mirror the pair-join semantics: NULL
+    labels never pair (the label equi-join is NULL-rejecting), and a NULL
+    vector or element made the dot NULL (the pair dropped, never prunes).
+    A vector shorter than EMBEDDING_DIM raises `KernelInputError`."""
+    dim = S.EMBEDDING_DIM
+    v = (
+        emb.select("label", "vec_id", S._as_double(F.col("embedding")).alias("embedding"))
+        .filter(F.col("label").isNotNull())
+        .filter(~F.exists(F.col("embedding"), lambda x: x.isNull()))
+    )
+    cand = v.groupBy("label").applyInPandas(
+        _semdedup_max_cos_kernel(dim), "label int, vec_id long, max_cos double"
+    )
+    removed = cand.filter(F.round(F.col("max_cos"), 6) >= _SEM_TAU).select(
+        "label", "vec_id"
+    )
+    n = emb.groupBy("label").agg(F.count("*").alias("n_vecs"))
+    r = removed.groupBy("label").agg(F.count("*").alias("n_removed"))
+    return (
+        n.join(r, "label", "left")
+        .select(
+            "label",
+            "n_vecs",
+            F.coalesce(F.col("n_removed"), F.lit(0)).alias("n_removed"),
+            (F.col("n_vecs") - F.coalesce(F.col("n_removed"), F.lit(0))).alias(
+                "n_kept"
+            ),
+        )
+        .orderBy("label")
+    )
 
 
 @register(
@@ -382,58 +416,13 @@ def _semdedup_max_cos_kernel(dim: int):
     "keep-lowest-id — deterministic, order-free). Clusters ARE the join "
     "key: the pair stream is an equi-join on label, so the quadratic "
     "cosine work is bounded per-cluster — the entire point of clustering "
-    "before dedup at 100 TB. Cosine is the unrolled-codegen dot "
-    "(operators.similarity.dot) rounded to 6 dp on both engines before "
-    "the threshold, eliminating last-ulp drift.",
+    "before dedup at 100 TB. Cosine sums in coordinate order "
+    "(operators.kernels.inorder_dot, bit-identical to the unrolled dot) "
+    "and rounds to 6 dp on both engines before the threshold, "
+    "eliminating last-ulp drift.",
 )
 def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    # r15 kernel rewrite (guide §4.2): the per-label quadratic cosine moved
-    # from a label-keyed pair JOIN with the unrolled 64-term codegen dot
-    # (history: the norms had to stay OUT of the join condition or Janino's
-    # 64 KB doConsume limit tripped interpreted fallback — r14 note) into a
-    # grouped NumPy block kernel. Two load-bearing reductions:
-    # - per-pair work becomes one in-order multiply-add sweep over the
-    #   label's whole block matrix (same IEEE op sequence as the unrolled
-    #   chain — the only divergence class is ±0.0 totals, which compare
-    #   identically against the threshold; round + >= tau stay in the JVM);
-    # - the Arrow emission is ONE ROW PER VECTOR, not per pair: a is pruned
-    #   iff EXISTS b<a with round(cos,6) >= tau, and round is monotone
-    #   nondecreasing, so exists(round(cos) >= tau) == round(MAX cos) >= tau
-    #   — the kernel emits max_b cos(a,b) and the JVM applies the exact
-    #   original predicate to it.
-    # Pre-filters mirror the join semantics exactly: NULL labels never pair
-    # (a.label == b.label is NULL-rejecting), NULL vector elements made the
-    # dot NULL (pair dropped, never prunes), and the unrolled dot reads
-    # exactly the first EMBEDDING_DIM elements — the kernel truncates to
-    # that width and (like the ANSI a[i] access) never scores shorter rows.
-    dim = S.EMBEDDING_DIM
-    v = (
-        emb.select("label", "vec_id", S._as_double(F.col("embedding")).alias("ve"))
-        .filter(F.col("label").isNotNull())
-        .filter(~F.exists(F.col("ve"), lambda x: x.isNull()))
-        .filter(F.size(F.col("ve")) >= dim)
-    )
-    cand = v.groupBy("label").applyInPandas(
-        _semdedup_max_cos_kernel(dim), "label int, vec_id long, max_cos double"
-    )
-    removed = cand.filter(F.round(F.col("max_cos"), 6) >= _SEM_TAU).select(
-        "label", "vec_id"
-    )
-    n = emb.groupBy("label").agg(F.count("*").alias("n_vecs"))
-    r = removed.groupBy("label").agg(F.count("*").alias("n_removed"))
-    return (
-        n.join(r, "label", "left")
-        .select(
-            "label",
-            "n_vecs",
-            F.coalesce(F.col("n_removed"), F.lit(0)).alias("n_removed"),
-            (F.col("n_vecs") - F.coalesce(F.col("n_removed"), F.lit(0))).alias(
-                "n_kept"
-            ),
-        )
-        .orderBy("label")
-    )
+    return semdedup_prune(table(spark, sf_dir, "embeddings"))
 
 
 # --------------------------------------------------------------------------

@@ -32,9 +32,14 @@ by definition. These twins gate what CAN be exact, with the
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.kernels import KernelInputError, unpack
 from ..operators.similarity import _hyperplanes
 from ..sources.catalog import table
 from .iterative import _best_assign, _d2_sql, _to_fixed
@@ -614,18 +619,19 @@ _JL_R_VALUES_SQL = ",\n            ".join(
 def _jl_pair_d2_kernel():
     """Cogrouped NumPy kernel: per hash block, the exact-integer squared
     L2 distances (projected and original) for every (corpus row, query)
-    pair with vec_id > qid — replacing the per-pair JVM HOF folds (r15,
-    guide §4.2).
+    pair with vec_id > qid.
 
     EXACTNESS: every quantity is int64 INTEGER algebra — the Rademacher
     projection is a ±1 integer matmul over micro-quantized BIGINT
     coordinates and both d2s are sums of integer squares, so results are
     order-independent and exactly equal to the sequential JVM folds (no
-    floating point anywhere before the JVM's own decimal tail). Overflow
-    margins at |x| ≤ 1 (unit-ish embeddings, |xi| ≤ 1e6): |y| ≤ 64·1e6 =
-    6.4e7, d2p ≤ 16·(2·6.4e7)² ≈ 2.6e17, d2o ≤ 64·(2e6)² ≈ 2.6e14 — both
-    far inside int64 (9.2e18); the 128-bit d2p·640 bucket product stays
-    in the JVM's DECIMAL(38,0) tail exactly as before.
+    floating point anywhere before the JVM's own decimal tail); the
+    128-bit d2p·640 bucket product stays in the JVM's DECIMAL(38,0) tail.
+    The int64 sums cannot wrap while max|x| ≤ m: a row of the projection
+    width w projects to |y| ≤ w·m, so d2p ≤ _JL_K·(2·w·m)²; a row of any
+    other width w gets only d2o ≤ w·(2·m)². A coordinate past that bound
+    raises `KernelInputError` (m ≈ 5.9e6 at w = 64; micro-quantized unit
+    embeddings have |x| ≤ 1e6).
 
     Rows whose xi length differs from the projection width keep the old
     padded-zip_with semantics: same-length pairs get a real d2o with a
@@ -633,40 +639,28 @@ def _jl_pair_d2_kernel():
     drop via the JVM's d2o > 0 filter never seeing them (the old plan
     produced NULL d2o)."""
     proj_rows = _JL_R  # plain list literal — pickled by value with the fn
+    width, n_proj = len(_JL_R[0]), _JL_K
+
+    def check(ids, X, column):
+        terms = n_proj * width * width if X.shape[1] == width else X.shape[1]
+        bound = math.isqrt((2**63 - 1) // (4 * max(terms, 1)))
+        out = (X > bound) | (X < -bound)
+        if out.any():
+            i, k = np.argwhere(out)[0]
+            raise KernelInputError(
+                column, ids[i], int(X[i, k]),
+                f"is past the int64 bound |x| <= {bound} of the JL kernel",
+            )
 
     def compute(left, right):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "d2p": pd.Series(dtype="object"),
-                "d2o": pd.Series(dtype="object"),
-            }
-        )
         if not len(left) or not len(right):
-            return empty
+            return pd.DataFrame()
         R = np.asarray(proj_rows, dtype=np.int64)
-
-        def by_len(ids, vecs):
-            groups: dict = {}
-            for vid, vec in zip(ids, vecs):
-                arr = np.asarray(vec, dtype=np.int64)
-                g_ids, rows = groups.setdefault(arr.shape[0], ([], []))
-                g_ids.append(vid)
-                rows.append(arr)
-            return {
-                ln: (
-                    np.asarray(g_ids, dtype=np.int64),
-                    np.vstack(rows)
-                    if ln
-                    else np.empty((len(rows), 0), dtype=np.int64),
-                )
-                for ln, (g_ids, rows) in groups.items()
-            }
-
-        cg = by_len(left["vec_id"], left["xi_arr"])
-        qg = by_len(right["qid"], right["q_xi"])
+        cg = unpack(left["xi_arr"], left["vec_id"], np.int64)
+        qg = unpack(right["q_xi"], right["qid"], np.int64)
+        for groups, column in ((cg, "xi_arr"), (qg, "q_xi")):
+            for ids, X in groups.values():
+                check(ids, X, column)
         frames = []
         for ln, (cids, X) in cg.items():
             if ln not in qg:
@@ -691,7 +685,7 @@ def _jl_pair_d2_kernel():
             else:
                 d2p_col = np.full(len(ii), None, dtype=object)
             frames.append(pd.DataFrame({"d2p": d2p_col, "d2o": D2O[ii, jj]}))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
 
     return compute
 
@@ -756,11 +750,9 @@ def _jl_pair_d2_kernel():
 )
 def emb_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
-    # r15 kernel rewrite (guide §4.2): the _JL_NQ × corpus pair d2s moved
-    # from per-pair JVM HOF folds (interpreted ArrayAggregate per element)
-    # into one cogrouped NumPy block kernel; exact-integer algebra makes
-    # the equivalence order-free (see _jl_pair_d2_kernel). The decile /
-    # DECIMAL(38,0) tail and the d2o > 0 filter stay in the JVM unchanged.
+    # the _JL_NQ × corpus pair d2s come from one cogrouped integer kernel
+    # (`_jl_pair_d2_kernel`); the decile / DECIMAL(38,0) tail and the
+    # d2o > 0 filter stay in the JVM.
     n_groups = 16
     fixed = emb.select("vec_id", _to_fixed(F.col("embedding")).alias("xi_arr")).filter(
         # null-element vectors made every d2 involving them NULL (dropped

@@ -44,130 +44,6 @@ def default_parallelism() -> int:
 _STACK_GUARD = "-Xss64m"
 
 
-def _properties_logical_lines(lines) -> "list[str]":
-    """Join ``java.util.Properties`` continuation lines into logical lines.
-
-    A natural line whose trailing backslash run has ODD length continues
-    onto the next natural line (the backslash is dropped and the
-    continuation's leading whitespace is skipped, per Properties.load);
-    an even run is escaped backslashes, not a continuation. Comment lines
-    (# or !) are recognized only at the START of a logical line."""
-    out: list[str] = []
-    buf: str | None = None
-    for raw in lines:
-        line = raw.rstrip("\r\n")
-        if buf is None:
-            line = line.lstrip()
-            if not line or line[0] in "#!":
-                continue
-        else:
-            line = line.lstrip()
-        trailing = len(line) - len(line.rstrip("\\"))
-        if trailing % 2 == 1:
-            buf = (buf or "") + line[:-1]
-            continue
-        out.append((buf or "") + line)
-        buf = None
-    if buf is not None:
-        out.append(buf)
-    return out
-
-
-def _properties_unescape(s: str) -> str:
-    """Properties.load escape processing: ``\\uXXXX``, ``\\t\\n\\r\\f``,
-    and "any other escaped char is the char itself" (covers ``\\=`` ``\\:``
-    ``\\ `` ``\\\\``)."""
-    out: list[str] = []
-    i = 0
-    while i < len(s):
-        c = s[i]
-        if c == "\\" and i + 1 < len(s):
-            nxt = s[i + 1]
-            if nxt == "u" and i + 6 <= len(s):
-                try:
-                    out.append(chr(int(s[i + 2 : i + 6], 16)))
-                    i += 6
-                    continue
-                except ValueError:
-                    pass
-            out.append({"t": "\t", "n": "\n", "r": "\r", "f": "\f"}.get(nxt, nxt))
-            i += 2
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _properties_split(line: str) -> "tuple[str, str]":
-    """Split one logical Properties line at the first UNESCAPED ``=``,
-    ``:``, or whitespace run (whitespace may precede a single =/: that is
-    still part of the separator). Returns (raw_key, raw_value), both still
-    escaped."""
-    i, n = 0, len(line)
-    key: list[str] = []
-    while i < n:
-        c = line[i]
-        if c == "\\" and i + 1 < n:
-            key.append(c)
-            key.append(line[i + 1])
-            i += 2
-            continue
-        if c in "=:" or c in " \t\f":
-            break
-        key.append(c)
-        i += 1
-    while i < n and line[i] in " \t\f":
-        i += 1
-    if i < n and line[i] in "=:":
-        i += 1
-        while i < n and line[i] in " \t\f":
-            i += 1
-    return "".join(key), line[i:]
-
-
-def _defaults_file_java_opts() -> str:
-    """spark.driver.extraJavaOptions from spark-defaults.conf, if one exists.
-
-    ``builder.config(key, ...)`` replaces (not merges) file-based defaults, so
-    preserving an operator-provided option string means reading it ourselves
-    before the JVM launches.
-
-    Spark loads the file through ``java.util.Properties``; the parse here
-    mirrors Properties.load: backslash line-continuations are joined
-    (``_properties_logical_lines``), the key/value separator is the first
-    unescaped ``=``, ``:``, or whitespace run (``_properties_split``), and
-    ``\\uXXXX`` / ``\\=`` / ``\\:`` / ``\\ `` escapes are processed in both
-    key and value (``_properties_unescape``). The key is matched EXACTLY
-    after unescaping, so a longer key sharing the prefix (e.g.
-    ``spark.driver.extraJavaOptionsFoo``) is never mistaken for it."""
-    conf_dir = os.environ.get("SPARK_CONF_DIR")
-    if not conf_dir and "SPARK_HOME" in os.environ:
-        conf_dir = os.path.join(os.environ["SPARK_HOME"], "conf")
-    path = conf_dir and os.path.join(conf_dir, "spark-defaults.conf")
-    if not path or not os.path.isfile(path):
-        return ""
-    with open(path, encoding="utf-8") as fh:
-        for line in _properties_logical_lines(fh):
-            raw_key, raw_val = _properties_split(line)
-            if _properties_unescape(raw_key) == "spark.driver.extraJavaOptions":
-                return _properties_unescape(raw_val).strip()
-    return ""
-
-
-def _merge_driver_java_opts(caller_opts: str | None) -> str:
-    """Merge the ``-Xss64m`` stack guard with pre-existing driver options.
-
-    Caller-supplied options (via ``extra_conf``) win over spark-defaults.conf
-    ones (Spark's own precedence); the stack guard is appended unless the
-    resulting string already pins a thread-stack size — an explicit caller
-    ``-Xss...`` is respected, never doubled or overridden."""
-    base = caller_opts if caller_opts is not None else _defaults_file_java_opts()
-    base = (base or "").strip()
-    if "-Xss" in base:
-        return base
-    return f"{base} {_STACK_GUARD}".strip() if base else _STACK_GUARD
-
-
 def local_cluster_conf(master: str) -> "dict[str, str]":
     """Extra conf for a ``local-cluster[W,C,M]`` master (multi-executor mode).
 
@@ -214,6 +90,13 @@ def get_spark(
 
     local[N] for tests/bench; the same config block is what we would ship in
     ``spark-defaults.conf`` on a 1000-executor cluster (minus ``master``).
+
+    The ``-Xss64m`` stack guard (see ``_STACK_GUARD``) is set as
+    ``spark.driver.defaultJavaOptions``, which Spark puts before
+    ``spark.driver.extraJavaOptions`` on the driver's command line: the
+    caller's or spark-defaults.conf's extraJavaOptions are kept, and an
+    ``-Xss`` among them wins. An admin's own
+    ``spark.driver.defaultJavaOptions`` is replaced.
     """
     # Export the vendored google.protobuf shim onto PYTHONPATH while the
     # JVM (which hands that env to its Python workers) can still inherit
@@ -247,16 +130,9 @@ def get_spark(
         # recent history inspectable; callers override via extra_conf.
         .config("spark.sql.ui.retainedExecutions", "50")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", _STACK_GUARD)
     )
-    extra = dict(extra_conf or {})
-    # `-Xss64m` stack guard (see _STACK_GUARD), MERGED with spark-defaults /
-    # caller-supplied driver options instead of clobbering them — a caller's
-    # own extraJavaOptions keep the guard appended, and an explicit -Xss wins.
-    builder = builder.config(
-        "spark.driver.extraJavaOptions",
-        _merge_driver_java_opts(extra.pop("spark.driver.extraJavaOptions", None)),
-    )
-    for k, v in extra.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

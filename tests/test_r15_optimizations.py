@@ -43,7 +43,7 @@ def _pre_r15_near_dup_pairs(corpus, min_sim):
     """The r14-era blocked equi-join + HOF-fold formulation, reconstructed
     inline (operators/similarity.py@r14). The r15 kernel must reproduce it
     bit-for-bit: the NumPy accumulation performs the same IEEE ops in the
-    same order (see _block_pair_scorer's docstring)."""
+    same order (see operators.kernels.inorder_dot)."""
     from bigdata_etl_elt_dashboard_spark.operators.similarity import (
         _as_double,
         _fan_out,
@@ -278,35 +278,9 @@ def test_semdedup_zero_norm_and_null_label_semantics(spark):
     rows += [(None, 102, [1.0] * 64), (None, 103, [1.0] * 64)]  # null label
     df = spark.createDataFrame(rows, "label int, vec_id long, embedding array<float>")
     old = _rows(_pre_r15_semdedup(df))
-    # run the registered internals over the synthetic frame
-    from bigdata_etl_elt_dashboard_spark.operators import similarity as S
-    from bigdata_etl_elt_dashboard_spark.plans.corpus_spans import (
-        _SEM_TAU,
-        _semdedup_max_cos_kernel,
-    )
+    from bigdata_etl_elt_dashboard_spark.plans.corpus_spans import semdedup_prune
 
-    dim = S.EMBEDDING_DIM
-    v = (
-        df.select("label", "vec_id", S._as_double(F.col("embedding")).alias("ve"))
-        .filter(F.col("label").isNotNull())
-        .filter(~F.exists(F.col("ve"), lambda x: x.isNull()))
-        .filter(F.size(F.col("ve")) >= dim)
-    )
-    cand = v.groupBy("label").applyInPandas(
-        _semdedup_max_cos_kernel(dim), "label int, vec_id long, max_cos double"
-    )
-    removed = cand.filter(F.round(F.col("max_cos"), 6) >= _SEM_TAU).select(
-        "label", "vec_id"
-    )
-    n = df.groupBy("label").agg(F.count("*").alias("n_vecs"))
-    r = removed.groupBy("label").agg(F.count("*").alias("n_removed"))
-    new = _rows(
-        n.join(r, "label", "left").select(
-            "label", "n_vecs",
-            F.coalesce(F.col("n_removed"), F.lit(0)).alias("n_removed"),
-            (F.col("n_vecs") - F.coalesce(F.col("n_removed"), F.lit(0))).alias("n_kept"),
-        )
-    )
+    new = _rows(semdedup_prune(df))
     assert old == new
 
 

@@ -348,63 +348,13 @@ def test_local_cluster_conf_shape():
     ] == "1024m"
 
 
-def test_driver_java_opts_merge():
-    """The -Xss64m stack guard merges with (never clobbers) pre-existing
-    or caller-supplied spark.driver.extraJavaOptions; an explicit caller
-    -Xss wins outright."""
-    from bigdata_etl_elt_dashboard_spark.session import _merge_driver_java_opts
-
-    assert _merge_driver_java_opts(None).endswith("-Xss64m")
-    assert _merge_driver_java_opts("") == "-Xss64m"
-    merged = _merge_driver_java_opts("-Duser.timezone=UTC")
-    assert "-Duser.timezone=UTC" in merged and "-Xss64m" in merged
-    # an explicit caller stack size is respected, not doubled or overridden
-    assert _merge_driver_java_opts("-Xss8m") == "-Xss8m"
-    kept = _merge_driver_java_opts("-Xss128m -Dfoo=bar")
-    assert kept == "-Xss128m -Dfoo=bar" and "-Xss64m" not in kept
-
-
-def test_defaults_file_java_opts_properties_separators(tmp_path, monkeypatch):
-    """spark-defaults.conf is loaded by java.util.Properties, which accepts
-    '=', ':' and whitespace as key/value separators — the reader must parse
-    all three and match the key exactly (never prefix-match a longer key,
-    never return a value with a leading separator glued on)."""
-    from bigdata_etl_elt_dashboard_spark.session import _defaults_file_java_opts
-
-    conf_dir = tmp_path / "conf"
-    conf_dir.mkdir()
-    monkeypatch.setenv("SPARK_CONF_DIR", str(conf_dir))
-
-    def write(text):
-        (conf_dir / "spark-defaults.conf").write_text(text, encoding="utf-8")
-
-    # '=' separator — the case that used to come back as '=-XX:+UseG1GC'
-    write("spark.driver.extraJavaOptions=-XX:+UseG1GC\n")
-    assert _defaults_file_java_opts() == "-XX:+UseG1GC"
-    # ':' separator with spaces
-    write("spark.driver.extraJavaOptions : -Dfoo=bar\n")
-    assert _defaults_file_java_opts() == "-Dfoo=bar"
-    # whitespace separator (the only form handled before)
-    write("spark.driver.extraJavaOptions   -Xmx2g -Dx=y\n")
-    assert _defaults_file_java_opts() == "-Xmx2g -Dx=y"
-    # '=' with surrounding spaces
-    write("spark.driver.extraJavaOptions = -XX:+UseG1GC\n")
-    assert _defaults_file_java_opts() == "-XX:+UseG1GC"
-    # a LONGER key sharing the prefix must not match
-    write("spark.driver.extraJavaOptionsExtra=-Xmx1g\n")
-    assert _defaults_file_java_opts() == ""
-    # comments and unrelated keys are skipped
-    write(
-        "# a comment\n! another\nspark.executor.memory=4g\n"
-        "spark.driver.extraJavaOptions=-Xss1m\n"
-    )
-    assert _defaults_file_java_opts() == "-Xss1m"
-    # merged result stays a launchable option string (no leading '=')
-    from bigdata_etl_elt_dashboard_spark.session import _merge_driver_java_opts
-
-    write("spark.driver.extraJavaOptions=-XX:+UseG1GC\n")
-    merged = _merge_driver_java_opts(None)
-    assert merged == "-XX:+UseG1GC -Xss64m"
+def test_driver_stack_guard_is_live(spark):
+    """The factory's -Xss64m stack guard reaches the running driver JVM
+    through spark.driver.defaultJavaOptions (Spark puts it before any
+    extraJavaOptions, so a caller's own -Xss still wins)."""
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert "-Xss64m" in args, args
 
 
 def test_global_total_matches_full_frame_window(spark):
@@ -452,53 +402,6 @@ def test_global_total_matches_full_frame_window(spark):
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in plan
     assert "Window" not in plan
-
-
-def test_defaults_file_java_opts_properties_continuations(tmp_path, monkeypatch):
-    """java.util.Properties joins backslash-continued lines (continuation's
-    leading whitespace skipped, comment markers only honored at the START
-    of a logical line) and processes \\uXXXX / \\= / \\: / '\\ ' escapes in
-    keys and values — the reader must match all of that, not just
-    single-line entries (round-11 ADVICE item)."""
-    from bigdata_etl_elt_dashboard_spark.session import _defaults_file_java_opts
-
-    conf_dir = tmp_path / "conf"
-    conf_dir.mkdir()
-    monkeypatch.setenv("SPARK_CONF_DIR", str(conf_dir))
-
-    def write(text):
-        (conf_dir / "spark-defaults.conf").write_text(text, encoding="utf-8")
-
-    # odd trailing backslash = continuation; continuation's leading
-    # whitespace is skipped, the backslash itself is dropped
-    write("spark.driver.extraJavaOptions=-Xss1m \\\n      -XX:+UseG1GC\n")
-    assert _defaults_file_java_opts() == "-Xss1m -XX:+UseG1GC"
-    # EVEN trailing run = escaped backslash(es), NOT a continuation; the
-    # pre-fix reader returned the literal trailing backslash glued on
-    write(
-        "spark.driver.extraJavaOptions=-Ddir=c\\\\\n"
-        "spark.executor.memory=4g\n"
-    )
-    assert _defaults_file_java_opts() == "-Ddir=c\\"
-    # a '#' line INSIDE a continuation is content, not a comment
-    write(
-        "spark.executor.extraJavaOptions=-Xmx1g \\\n"
-        "#still-the-executor-value\n"
-        "spark.driver.extraJavaOptions=-Xss2m\n"
-    )
-    assert _defaults_file_java_opts() == "-Xss2m"
-    # escaped '.' in the key unescapes before the exact match (Java parity)
-    write("spark.driver\\.extraJavaOptions=-Xint\n")
-    assert _defaults_file_java_opts() == "-Xint"
-    # an ESCAPED space is part of the key -> different key, no match
-    write("spark.driver.extraJavaOptions\\ x=-Xmx1g\n")
-    assert _defaults_file_java_opts() == ""
-    # \uXXXX escapes decode in the value
-    write("spark.driver.extraJavaOptions=-Dch\\u0061rset=utf8\n")
-    assert _defaults_file_java_opts() == "-Dcharset=utf8"
-    # a continuation that ends the file (no following line) still parses
-    write("spark.driver.extraJavaOptions=-Xss3m \\")
-    assert _defaults_file_java_opts() == "-Xss3m"
 
 
 def test_global_total_rejects_colliding_alias(spark):

@@ -6,19 +6,31 @@
   and its pair set does not depend on that size;
 - ``dedup_embedding_cosine`` runs the Python kernel once per block-pair
   group per collect (the sort's range sample reads shuffle files);
-- ``near_dup_pairs`` rejects non-integral ids by name.
+- ``near_dup_pairs`` rejects non-integral ids by name;
+- the shared vector-kernel boundary (``operators/kernels.py``): one
+  unpack, one in-order dot, and `KernelInputError` for SemDeDup's short
+  vectors and the JL kernel's int64 bound.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import math
 import re
 
+import numpy as np
+import pandas as pd
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from bigdata_etl_elt_dashboard_spark.operators import similarity as S
+from bigdata_etl_elt_dashboard_spark.operators.kernels import (
+    KernelInputError,
+    inorder_dot,
+    unpack,
+)
 from bigdata_etl_elt_dashboard_spark.plans import REGISTRY
 from bigdata_etl_elt_dashboard_spark.sources.catalog import table
 
@@ -180,3 +192,85 @@ def test_near_dup_pairs_rejects_non_integral_ids(spark):
     out = S.near_dup_pairs(ints, min_sim=0.5)
     assert out.schema["doc_a"].dataType.simpleString() == "bigint"
     assert [r[:2] for r in _rows(out)] == [(0, 1)]
+
+
+# ---------------------------------------------------------------------------
+# the vector-kernel boundary: unpack, in-order dot, named input errors
+# ---------------------------------------------------------------------------
+
+
+def test_unpack_groups_by_length_and_skips_null_vectors():
+    """NULL vectors are skipped, a NULL element stays NaN, and each length
+    (the empty one included) gets its own matrix, rows in input order."""
+    vecs = pd.Series(
+        [np.array([1.0, 2.0]), None, np.array([3.0, np.nan]), np.array([]), np.array([4.0, 5.0, 6.0])]
+    )
+    got = unpack(vecs, [10, 11, 12, 13, 14])
+    assert sorted(got) == [0, 2, 3]
+    ids, m = got[2]
+    assert ids.dtype == np.int64 and ids.tolist() == [10, 12]
+    np.testing.assert_array_equal(m, [[1.0, 2.0], [3.0, np.nan]])
+    assert got[0][0].tolist() == [13] and got[0][1].shape == (1, 0)
+    ids, m = unpack(pd.Series([np.array([7, -8])]), [0], np.int64)[2]
+    assert m.dtype == np.int64 and m.tolist() == [[7, -8]]
+
+
+def test_inorder_dot_is_the_left_fold():
+    """Bit for bit the sequential fold ((0.0 + a0*b0) + a1*b1) + ..., for the
+    dot matrix and the squared norms alike."""
+    rng = np.random.default_rng(7)
+    a, b = rng.standard_normal((5, 64)), rng.standard_normal((3, 64))
+
+    def fold(x, y):
+        acc = 0.0
+        for xi, yi in zip(x.tolist(), y.tolist()):
+            acc = acc + xi * yi
+        return acc
+
+    c = inorder_dot(a[:, None, :], b[None, :, :])
+    assert c.tolist() == [[fold(x, y) for y in b] for x in a]
+    assert inorder_dot(a, a).tolist() == [fold(x, x) for x in a]
+
+
+@pytest.mark.parametrize("label_of_short", [0, 5], ids=["with-neighbors", "alone"])
+def test_semdedup_short_vector_raises_named_error(spark, label_of_short):
+    """A vector shorter than EMBEDDING_DIM fails the query with the column
+    and the row id named, whether or not it has a same-label neighbor;
+    it is never silently left out of the prune set."""
+    from bigdata_etl_elt_dashboard_spark.plans.corpus_spans import semdedup_prune
+
+    rows = [(i % 2, i, [float((i * 3 + j) % 5 - 2) for j in range(64)]) for i in range(6)]
+    rows.append((label_of_short, 7, [1.0, 2.0]))
+    df = spark.createDataFrame(rows, "label int, vec_id long, embedding array<float>")
+    with pytest.raises(PythonException, match=r"KernelInputError: column 'embedding', row 7: \[1\.0, 2\.0\]"):
+        semdedup_prune(df).collect()
+
+
+def test_jl_kernel_rejects_coordinates_past_the_int64_bound():
+    """At the bound the int64 d2s equal exact integer arithmetic; one past
+    it, on either cogroup side, raises instead of wrapping."""
+    from bigdata_etl_elt_dashboard_spark.plans.similarity_gate import _JL_R, _jl_pair_d2_kernel
+
+    r = np.asarray(_JL_R, dtype=np.int64)
+    k, w = r.shape
+    bound = math.isqrt((2**63 - 1) // (4 * k * w * w))
+    kernel = _jl_pair_d2_kernel()
+
+    def frames(m):
+        x, q = m * r[0], -m * r[0]
+        left = pd.DataFrame({"_g": [0], "vec_id": [5], "xi_arr": [x]})
+        right = pd.DataFrame({"_g": [0], "qid": [1], "q_xi": [q]})
+        return x, q, left, right
+
+    x, q, left, right = frames(bound)
+    out = kernel(left, right)
+    yx, yq = [int(v) for v in r @ x], [int(v) for v in r @ q]
+    assert out["d2p"].tolist() == [sum((a - b) ** 2 for a, b in zip(yx, yq))]
+    assert out["d2o"].tolist() == [sum((int(a) - int(b)) ** 2 for a, b in zip(x, q))]
+
+    _, _, left, right = frames(bound + 1)
+    for side, column, row in ((0, "xi_arr", 5), (1, "q_xi", 1)):
+        args = [frames(bound)[2], frames(bound)[3]]
+        args[side] = (left, right)[side]
+        with pytest.raises(KernelInputError, match=rf"column '{column}', row {row}: -?{bound + 1} "):
+            kernel(*args)

@@ -121,7 +121,7 @@ def main() -> int:
             _json.dump(
                 {
                     "sf": sf,
-                    "master": master or "local[8]",
+                    "master": spark.sparkContext.master,
                     "session": "default" if default_session else "factory",
                     "n_total": len(names),
                     "n_ok": len(names) - len(failed),

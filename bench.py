@@ -45,8 +45,8 @@ HEADLINE = {
 
 
 #: one representative per extension family (dedup / ANN / text / events /
-#: corpus prep / multimodal). Keys are stable round-over-round so BENCH_r{N}
-#: diffs are meaningful; only additions allowed.
+#: corpus prep / multimodal). Keys are stable so BENCH_*.json diffs stay
+#: meaningful; only additions allowed.
 EXTENSION_SUITE = (
     "dedup_exact_groups",
     "dedup_lsh_candidates",
@@ -56,29 +56,18 @@ EXTENSION_SUITE = (
     # the two quadratic kernels — the scale stress tests of the suite
     "dedup_embedding_cosine",
     "sim_ann_lsh",
-    # round-2 additions
     "dedup_clusters_star",
     "docs_sequence_packing",
     "docs_decontaminate",
     "mm_decode_channel_stats",
-    # round-2 late additions: repetition filter, iterative algorithms,
-    # exact-moment statistics
     "docs_repetition_metrics",
     "graph_pagerank_3iter",
     "sim_kmeans_lloyd1",
     "stat_ols_price_vs_qty",
-    # round-2 final additions: unigram-LM scoring (token-join heavy), the
-    # Q18-style basket filter (agg-before-join), the KS drift statistic
-    # (distinct-value ECDF windows), and the LSH skew readout
     "text_unigram_logprob",
     "cust_big_basket_orders",
     "stat_ks_price_by_status",
     "dedup_lsh_bucket_skew",
-    # round-3 additions: the 10 most exchange-heavy never-benched queries
-    # from PLANS.md (plan-audit exch counts) — wedge-closing triangle count,
-    # per-step funnel re-aggregation, sketch-probe, containment join, the
-    # denormalized one-big-table build, basket lift, minhash error sweep,
-    # the S-curve validation, SemDeDup prune, and the sharded packing form
     "graph_copurchase_triangles",
     "ev_funnel_strict_steps",
     "stat_bloom_customer_probe",
@@ -89,8 +78,6 @@ EXTENSION_SUITE = (
     "dedup_lsh_scurve_validation",
     "dedup_semdedup_prune",
     "docs_sequence_packing_sharded",
-    # round-3 operator additions: distributed ranking, hard negatives,
-    # integer PCA/PQ, the data card, MERGE apply, LSH quality report
     "scale_global_rank_orders",
     "sim_hard_negatives",
     "emb_pca_project",
@@ -98,24 +85,16 @@ EXTENSION_SUITE = (
     "docs_data_card",
     "wh_merge_upsert_orders",
     "dedup_lsh_precision_recall",
-    # round-4 additions: the digest twins of the rows-only trio (bucket
-    # geometry / cell inventory / sketch contract) and the now-8-merge BPE
-    # training loop (per-round checkpoint — plan-build time IS its cost)
     "sim_ann_candidate_digest",
     "sim_ivf_cell_digest",
     "agg_sketch_param_digest",
     "docs_bpe_train_merges",
-    # round-4 wave 2: the composed cleaning pass, winnowing fingerprints,
-    # k-core peel, incremental-rollup refresh, ANN recall, and the
-    # cross-modal dedup agreement matrix
     "docs_pipeline_e2e_digest",
     "docs_winnowing_pairs",
     "graph_kcore_peel",
     "wh_incremental_rollup",
     "sim_ann_recall_digest",
     "dedup_method_agreement",
-    # round-5 additions: the new sketch/graph/experiment/warehouse queries
-    # (regression tripwires from their first round)
     "stat_hll_distinct_custkeys",
     "graph_label_propagation",
     "ev_ab_test_conversion",
@@ -127,20 +106,12 @@ EXTENSION_SUITE = (
     "text_token_fertility_by_lang",
     "cust_returned_revenue_top",
     "trend_wow_revenue_growth",
-    # round-5 session-2 additions: the clustering-coefficient explode (the
-    # triangle family's heaviest new member), frontier-expansion BFS, the
-    # Kendall pair grid, the decoder-moment contrast pass, the
-    # embedding-isotropy rollup, and the 5-table Q9 profit join
     "graph_clustering_coeff_hist",
     "graph_bfs_layers",
     "stat_kendall_tau_revenue_orders",
     "mm_image_contrast_stats",
     "emb_isotropy_mean_cosine",
     "profit_nation_year_q9",
-    # round-6 additions: the adapted TPC-H skeletons' heaviest members
-    # (correlated-MIN offers build, late-blame double rollup), the wedge-join
-    # link predictor, the block-dedup corpus pass, the mutual-kNN probe, the
-    # whole-value-frame rank test, and the interval-cover concurrency sweep
     "part_min_cost_supplier_q2",
     "supplier_late_blame_q21",
     "graph_jaccard_link_prediction",
@@ -149,10 +120,6 @@ EXTENSION_SUITE = (
     "stat_kruskal_wallis_price_by_priority",
     "ev_concurrent_sessions_peak",
     "part_pair_association_topk",
-    # round-6 tail additions: true-support k-truss and 3-step Katz (the
-    # capped/integer graph family's newest members), the 7-lag Ljung-Box
-    # pivot, classical decomposition, the VWAP rollup, IVF purity, the
-    # multi-probe LSH recall sweep, and the dense-grid drift monitor
     "graph_ktruss_edge_support",
     "graph_katz_centrality_3step",
     "stat_ljung_box_weekly",
@@ -161,46 +128,21 @@ EXTENSION_SUITE = (
     "emb_ivf_cell_purity",
     "sim_ann_multiprobe_gain",
     "dq_histogram_drift_l1",
-    # session-close additions: the spectral readout and the layout probe
     "stat_weekly_dft_power",
     "scale_zorder_file_skipping",
-    # round-7 additions: the four TPC-H completions (Q1's 8-aggregate
-    # single-scan rollup is the classic scan-throughput benchmark; Q3/Q5
-    # are the fact⋈fact join chains; Q6 the pure pushdown scan) and the
-    # composed dedup pipeline (candidates → verify → CC → keepers)
     "pricing_summary_q1",
     "unshipped_topk_q3",
     "local_supplier_volume_q5",
     "forecast_revenue_change_q6",
     "dedup_verified_keepers",
-    # round-7 widening: the two whose work scales with the fact stream
-    # (two-pass global shuffle ranking; the distinct-reduce retention
-    # triangle) — the rest are dim-/k-bounded downstream of one rollup
     "docs_shuffle_order_digest",
     "ev_retention_triangle",
     "stat_cross_correlation_lags",
-    # round-8 additions: the composed corpus capstone (quality filter →
-    # verified dedup → allocation → curriculum → packing; checkpoint-
-    # shaped like dedup_verified_keepers, so plan-build time IS its
-    # cost) and the timer-processor batch twin (events window + 1-row
-    # watermark broadcast)
     "corpus_pipeline_v2_digest",
     "ev_timer_session_close_twin",
-    # round-9 addition: the composed streaming-capstone batch twin
-    # (replay union → dedup distinct → sessionize → closed-filter → day
-    # rollup; the ev_timer_session_close_twin shape composed end-to-end)
     "ev_stream_pipeline_gold_twin",
-    # round-11 additions: the two new scale-operator shapes — the Q11
-    # top-N share gate riding global_total (r10) and the executed
-    # ordered-prefix escape hatch (range-partitioned prefix sums, r11) —
-    # so regressions in the hierarchical-total / two-pass machinery
-    # surface as bench deltas, not just test failures
     "li_value_share_topn",
     "supplier_pareto_cumshare_twopass",
-    # round-11 session-2 addition: the row-level LEFT range join (batch
-    # twin of the new leftOuter stream-stream join) — tripwire for
-    # range_join's two-bucket-probe padding collapse, whose extra
-    # per-left-row shuffle is the shape most likely to regress
     "ev_click_view_outer_twin",
 )
 

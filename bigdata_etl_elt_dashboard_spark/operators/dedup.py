@@ -399,9 +399,9 @@ def connected_components_minlabel(
     edges = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .transform(pin)
+        .transform(pin)  # iteration: every round's job joins it
     )
-    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster_id")).transform(pin)
+    labels = nodes.select("doc_id", F.col("doc_id").alias("cluster_id"))
     prev_sum = labels.agg(F.sum("cluster_id")).first()[0]
     for _ in range(max_iter):
         msgs = edges.join(
@@ -411,7 +411,7 @@ def connected_components_minlabel(
             labels.union(msgs)
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            .transform(pin)
+            .transform(pin)  # iteration: cuts lineage once per round
         )
         cur_sum = labels.agg(F.sum("cluster_id")).first()[0]
         if cur_sum == prev_sum:  # labels only decrease; equal sum == fixpoint
@@ -458,7 +458,7 @@ def connected_components_star(
         .filter(F.col("u") != F.col("v"))
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
         .distinct()
-        .transform(pin)
+        .transform(pin)  # iteration: round 1 and its fixpoint check read it
     )
     for _ in range(max_iter):
         # large-star: (v, m) for neighbors v > u — canonical (m, v) since m <= u < v
@@ -479,7 +479,7 @@ def connected_components_star(
             .union(with_m.select(F.col("m").alias("u"), F.col("u").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .transform(pin)
+            .transform(pin)  # iteration: cuts lineage once per round
         )
         # fixpoint: the edge set is exactly reproduced (order-insensitive)
         if (

@@ -30,13 +30,7 @@ def kcore_peel(
     formulation with one fewer shuffle was measured SLOWER — the window
     sort costs more than the semi-join hash exchange it saves.)
     """
-    # round 0 must be pinned (it is re-read by round 1 AND the trajectory
-    # rollup) — but callers that hand over an already-pinned frame (the
-    # shared co-purchase edge builder) shouldn't pay a second copy
-    if getattr(edges, "_graft_pinned", False):
-        e = edges
-    else:
-        e = edges.select("x", "y").transform(pin)
+    e = edges.select("x", "y")
 
     rounds_frames = [e]
     for _ in range(rounds):
@@ -51,12 +45,12 @@ def kcore_peel(
             e.join(keep.withColumnRenamed("node", "x"), "x", "semi")
             .join(keep.withColumnRenamed("node", "y"), "y", "semi")
             .select("x", "y")
-            .transform(pin)
+            .transform(pin)  # iteration: cuts lineage once per round
         )
         rounds_frames.append(e)
 
-    # trajectory stats in ONE job: tag each (pinned, so free to re-read)
-    # round's frame, explode endpoints, and roll up per round — instead of
+    # trajectory stats in ONE job: tag each round's frame, explode
+    # endpoints, and roll up per round — instead of
     # a separate driver action per round (rounds+1 jobs -> 1)
     spark = edges.sparkSession
     tagged = None

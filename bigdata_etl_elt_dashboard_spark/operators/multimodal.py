@@ -9,27 +9,29 @@ UDF. At 100 TB the binary payloads dominate I/O, so extraction projects
 only (media_id, features) forward and the binary column is dropped
 immediately after the map (column pruning keeps it out of later shuffles).
 
-Decoding is PLUGGABLE: ``set_decoder`` swaps in PIL/opencv on a cluster
-image that ships one. The default decoder is a real, dependency-free codec
-for binary PPM (P6) — decode, nearest-neighbor resize, re-encode all run
-and are tested in-container; compressed formats (JPEG/PNG/video) raise a
-clear error until a library decoder is registered.
+Decoding uses the built-in, dependency-free codecs (binary PPM P6, BMP,
+PNG) — decode, nearest-neighbor resize and re-encode all run in-process;
+any other payload (JPEG, video) raises a clear ``ValueError``. The module
+is shipped to Python workers by value, so a worker needs no import of this
+package, whatever the driver's working directory or PYTHONPATH.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+import sys
+from collections.abc import Iterator
 from dataclasses import dataclass
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
 # ---------------------------------------------------------------------------
-# Image codec: pluggable decoder with a pure-Python PPM (P6) default
+# Image codecs: pure-Python PPM (P6), BMP and PNG
 # ---------------------------------------------------------------------------
 
 
@@ -303,17 +305,6 @@ def decode_auto(content: bytes) -> DecodedImage:
     raise ValueError("unrecognized image payload (built-ins: PPM P6, BMP, PNG)")
 
 
-#: active decoder — swap via set_decoder() for PIL/opencv runtimes.
-_DECODER: Callable[[bytes], DecodedImage] = decode_auto
-
-
-def set_decoder(fn: Callable[[bytes], DecodedImage]) -> None:
-    """Install a library-backed decoder (e.g. wrap PIL: open → convert('RGB')
-    → tobytes). All decode paths (decode_image / resize_image /
-    decode_image_stats) route through it."""
-    global _DECODER
-    _DECODER = fn
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -325,9 +316,8 @@ FEATURE_SCHEMA = T.StructType(
 
 
 def decode_image(content: bytes) -> DecodedImage:
-    """Decode an image payload via the active decoder (default: built-in
-    PPM codec; ``set_decoder`` installs PIL/opencv where available)."""
-    return _DECODER(bytes(content))
+    """Decode an image payload with the built-in codecs (``decode_auto``)."""
+    return decode_auto(bytes(content))
 
 
 def _fake_feature(content: bytes, dim: int = 8) -> list[float]:
@@ -340,9 +330,7 @@ def _fake_feature(content: bytes, dim: int = 8) -> list[float]:
 def resize_image(content: bytes, width: int, height: int) -> bytes:
     """Decode → nearest-neighbor resample → re-encode (PPM out).
 
-    Nearest-neighbor keeps the path dependency-free and deterministic; a
-    library decoder installed via ``set_decoder`` still flows through the
-    same resample (it only needs to yield ``DecodedImage``)."""
+    Nearest-neighbor keeps the path dependency-free and deterministic."""
     img = decode_image(content)
     out = bytearray(width * height * 3)
     for y in range(height):
@@ -884,3 +872,8 @@ def downsample_box2_stats(media: DataFrame) -> DataFrame:
             )
 
     return media.select("media_id", "content").mapInPandas(stats, DOWNSAMPLE_SCHEMA)
+
+
+# Ship this module's functions to Python workers by value, as the
+# mapInPandas closures that call them are (see operators/kernels.py).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -31,15 +31,27 @@ PIN_DIR_CONF = "spark.graft.pin.dir"
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` now and truncate/freeze its lineage — the engine's
-    single pinning point for every multi-reference or per-iteration frame
-    (use as ``df.transform(pin)`` to keep method chains intact).
+    """Materialize ``df`` now and truncate its lineage (use as
+    ``df.transform(pin)`` to keep method chains intact).
 
-    Pinning is what makes multi-branch DAGs *correct by construction* here
-    (both branches read the same materialized bytes — partition ids, sampled
-    range boundaries, and nondeterministic orderings are frozen) and what
-    keeps iterative plans (PageRank, k-core, Lloyd, BPE) from re-executing
-    rounds 1..k-1 through lineage at round k.
+    Every call runs a Spark job while the query is being BUILT, before any
+    collect, so call it only for one of three reasons, named in a one-line
+    comment at the call site:
+
+    - **iteration**: a loop runs a job per round (a fixpoint check, a
+      driver-side centroid collect) or reads its previous round; pinning
+      each round stops round k from re-executing rounds 1..k-1 through
+      lineage (PageRank, k-core, connected components, BPE, Lloyd).
+    - **freeze**: two branches must see the same bytes of a frame that a
+      recompute could change — partition ids, a range-sample boundary, a
+      nondeterministic order, or files the same plan overwrites. Name the
+      test that depends on it.
+    - **scan-budget**: without it, the query's plan reads one table more
+      than ``tests/test_plan_shapes.py::_SCAN_BUDGET`` times, or runs a
+      Python kernel twice.
+
+    A frame that is merely referenced twice needs no pin: Catalyst's
+    exchange reuse and AQE's stage reuse share it inside one job.
 
     The mechanism is deployment policy, selected per session via
     ``spark.graft.pin.strategy``:
@@ -92,8 +104,6 @@ def pin(df: DataFrame) -> DataFrame:
             f"unknown {PIN_STRATEGY_CONF}={strategy!r}; "
             "expected local | reliable | persist"
         )
-    # marker for callers that conditionally re-pin (operators/graph.py)
-    out._graft_pinned = True
     return out
 
 
@@ -269,7 +279,7 @@ def global_rank(
     rp = (
         df.repartitionByRange(n, *cols)
         .withColumn("_pid", F.spark_partition_id())
-        .transform(pin)
+        .transform(pin)  # freeze: test_global_rank_pids_frozen_by_checkpoint
     )
     w = Window.partitionBy("_pid").orderBy(*cols)
     ranked = rp.withColumn("_rn", F.row_number().over(w))
@@ -325,7 +335,7 @@ def _grouped_two_pass(
     rp = (
         df.repartitionByRange(n, *gcols, *ocols)
         .withColumn("_pid", F.spark_partition_id())
-        .transform(pin)
+        .transform(pin)  # freeze: test_grouped_rank_matches_plain_window_on_hot_group
     )
     return rp, gcols, ocols
 
@@ -495,6 +505,7 @@ def global_total(
             "global_total agg aliases collide with input columns: "
             f"{sorted(clash)}; rename the aggregate aliases"
         )
+    # scan-budget: test_value_share_no_fact_rescan_no_window
     src = pin(df) if pin_input else df
     totals = src.agg(*aggs)
     return src.crossJoin(F.broadcast(totals))

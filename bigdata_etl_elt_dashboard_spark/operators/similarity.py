@@ -493,13 +493,10 @@ def ann_lsh_topk(
     all_planes = _hyperplanes(dim, n_tables * planes_per_table)
     # the planes ride as a NumPy constant inside the signature kernel
     # (`_lsh_sig_kernel`): no plan nodes, one vectorized sweep per batch.
-    # The corpus feeds BOTH the signature build and the post-candidate
-    # vector re-attach: pin the (id, vec) projection once instead of two
-    # full parquet scans (the cast/fan_out work also runs once)
     base = (
         _fan_out(corpus)
         .select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("_v"))
-        .transform(pin)
+        .transform(pin)  # scan-budget: signature kernel and re-attach share one scan
     )
 
     def with_sigs(v, id_alias):

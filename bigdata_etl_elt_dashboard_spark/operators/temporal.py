@@ -227,7 +227,7 @@ def strict_funnel_times(
         prev = (
             cur.groupBy(user_col)
             .agg(F.min(ts_col).alias("t"))
-            .transform(pin)
+            .transform(pin)  # scan-budget: the nested step chain scans events 10 times without it
         )
         out.append(prev)
     return out

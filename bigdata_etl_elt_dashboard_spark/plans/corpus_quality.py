@@ -82,8 +82,8 @@ def _doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own projection and only its scalar size crosses to the next stage.
     Inlining them via local Python variables re-evaluates the shared
     subexpression per use — the pre-r14 plan evaluated the bigram transform
-    4× and array_distinct(toks) 2× per row (plan audit,
-    plans/r14/docs_repetition_metrics_before.txt Project (4)) — and
+    4× and array_distinct(toks) 2× per row (one formatted-explain
+    Project node) — and
     Catalyst's CollapseProject leaves multi-referenced NON-cheap aliases
     staged, so the rewrite is a true 4×→1× per-row saving (guide §1.2
     step 2: per-task work; measured 2.04 s → noop-sink at sf0.1, see
@@ -1431,8 +1431,6 @@ def docs_pipeline_e2e_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("dup_bigram_ratio") <= _MAX_DUP_BIGRAM_RATIO)
     )
     kept = m.filter(kept_rules).select("doc_id")
-    # survivors feed the canon groupBy AND the keeper semi-join: checkpoint
-    # so the text is scanned / fingerprinted once
     surv = (
         docs.join(kept, "doc_id", "semi")
         .select(
@@ -1443,7 +1441,7 @@ def docs_pipeline_e2e_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(X.normalized_text(F.col("text"))).alias("fp"),
             X.token_count(F.col("text")).alias("n_tok"),
         )
-        .transform(pin)
+        .transform(pin)  # scan-budget: documents scanned 4 times without it
     )
     canon = surv.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     dd = surv.join(
@@ -1526,7 +1524,7 @@ def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (
         pts.groupBy("label", "pos")
         .agg(F.round(F.avg("xi")).cast("long").alias("mi"))
-        .transform(pin)
+        .transform(pin)  # scan-budget: embeddings scanned 6 times without it
     )
     a = cent.select(F.col("label").alias("la"), "pos", F.col("mi").alias("ma"))
     b = cent.select(F.col("label").alias("lb"), "pos", F.col("mi").alias("mb"))
@@ -1535,7 +1533,6 @@ def emb_label_centroid_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("la") <= F.col("lb"))
         .groupBy("la", "lb")
         .agg(F.sum(F.col("ma") * F.col("mb")).alias("dab"))
-        .transform(pin)  # pairs + both norm lookups
     )
     aa = d.filter(F.col("la") == F.col("lb")).select(
         F.col("la").alias("_l"), F.col("dab").alias("_naa")
@@ -1685,7 +1682,7 @@ def docs_contamination_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "each per-vector cosine is ONE fixed IEEE sequence rounded to an "
     "integer micro-cosine, and the corpus rollup sums those integers — "
     "order-independent, hash-stable. Spark shape: one posexplode "
-    "rollup for the 64-row mean (pinned, broadcast back), one "
+    "rollup for the 64-row mean (broadcast back), one "
     "vec-keyed reduce for dot/norm, a 1-row |mean|² scalar broadcast, "
     "and a 1-row final reduce.",
 )
@@ -1699,7 +1696,6 @@ def emb_isotropy_mean_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_v = (
         pts.groupBy("pos")
         .agg(F.round(F.avg("xi")).cast("long").alias("mi"))
-        .transform(pin)  # feeds the per-vec join AND the |m|^2 scalar
     )
     m2 = mean_v.agg(F.sum(F.col("mi") * F.col("mi")).alias("mm"))
     per_vec = (

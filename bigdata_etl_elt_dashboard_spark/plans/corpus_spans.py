@@ -131,7 +131,7 @@ def docs_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "positions, how many of them carry a span that also appears in "
     "another document, and the contamination fraction — the per-doc "
     "signal a span-removal or doc-drop policy keys on. Shape: one "
-    "checkpointed span stream feeds the cross-doc duplicate set "
+    "span stream feeds the cross-doc duplicate set "
     "(groupBy span, partial-aggregated) and the per-doc rollup; the "
     "span-keyed membership join is the same inverted-index shape as "
     "decontamination — never all-pairs. Counts exact; the fraction is "
@@ -139,12 +139,10 @@ def docs_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def docs_span_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # g feeds the duplicate-span set AND the membership join: checkpoint so
-    # the corpus is tokenized/shingled once; fan_out so the shingle HOF
-    # doesn't run at the scan's split count
+    # fan_out so the shingle HOF doesn't run at the scan's split count
     g = fan_out(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(_spans(X.tokens(F.col("text")), _SPAN_K)).alias("span")
-    ).transform(pin)
+    )
     dup = (
         g.groupBy("span")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -199,13 +197,12 @@ def docs_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    # ONE pinned frame: shingle (fan_out first — the interpreted-HOF
-    # shingling must not run at the scan's split count; 3.5 s serial on
-    # the one-row-group testdata), distinct, then apply the DF cap as a
-    # count-over-span WINDOW instead of a groupBy + rejoin — same span-
-    # keyed shuffle, but no second pass over the shingle stream and one
-    # checkpoint instead of two (the un-truncated r03 plan had 8 scans).
-    # shk feeds sizes and both inverted-index sides.
+    # shingle (fan_out first — the interpreted-HOF shingling must not run
+    # at the scan's split count; 3.5 s serial on the one-row-group
+    # testdata), distinct, then apply the DF cap as a count-over-span
+    # WINDOW instead of a groupBy + rejoin — same span-keyed shuffle, no
+    # second pass over the shingle stream. shk feeds sizes and both
+    # inverted-index sides.
     wspan = Window.partitionBy("span")
     shk = (
         fan_out(docs.select("doc_id", "text"))
@@ -216,7 +213,7 @@ def docs_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_df", F.count("*").over(wspan))
         .filter(F.col("_df") <= _CONT_DF_CAP)
         .drop("_df")
-        .transform(pin)
+        .transform(pin)  # scan-budget: documents scanned 4 times without it
     )
     sz = shk.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = shk.select(F.col("doc_id").alias("doc_a"), "span")
@@ -496,8 +493,7 @@ def docs_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Window used only for the bounded top-k cut below)
     base = docs.select("doc_id", X.tokens(F.col("text")).alias("toks"))
     tok = base.select(F.explode("toks").alias("tok"))
-    # uni feeds n1 + both per-word joins: checkpoint the vocab-sized count
-    # table so the unigram pass runs once (was 3 of this query's 5 scans)
+    # scan-budget: documents scanned 5 times without it
     uni = tok.groupBy("tok").agg(F.count("*").alias("c")).transform(pin)
     bg = base.select(F.explode(X.bigram_list(F.col("toks"))).alias("bgram")).select(
         F.split(F.col("bgram"), " ").getItem(0).alias("w1"),
@@ -662,13 +658,10 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
     )
-    # ONE corpus scan total: the weighted spaced-symbol vocab checkpoints
-    # here; each round below re-checkpoints the (vocab-sized) rewrite so
-    # round k never re-executes rounds 1..k-1 through lineage.
     spaced = words.select(
         F.concat(F.lit(" "), F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("sw"),
         "wc",
-    ).transform(pin)
+    ).transform(pin)  # iteration: every round's argmax collect starts here
 
     out_rows = []
     cur = spaced
@@ -704,7 +697,7 @@ def _train_bpe(spark: SparkSession, sf_dir: str):
                 F.col("sw"), F.lit(f" {l} {r} "), F.lit(f" {l}{r} ")
             ).alias("sw"),
             "wc",
-        ).transform(pin)
+        ).transform(pin)  # iteration: cuts lineage once per round
     return out_rows, cur
 
 

@@ -304,8 +304,7 @@ def dedup_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # the shingle stream feeds sizes + both inverted-index sides: checkpoint
-    # it so the corpus is scanned/shingled once (was 4 scans)
+    # scan-budget: documents scanned 4 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     # jaccard_pairs filters on the UNROUNDED ratio (matching the oracle's
     # WHERE); the rounded column it returns is display-only
@@ -3430,15 +3429,11 @@ _EST_MATCHES_SQL = " + ".join(
 )
 def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # The shingle stream and the signature table each feed MULTIPLE derived
-    # frames (sizes/common resp. est's two sides + banding). localCheckpoint
-    # both once so the corpus is scanned and shingled exactly ONCE — without
-    # it the final plan re-derived them per reference (judge-measured 8
-    # parquet scans at r03; the 100 TB bill is 8 corpus passes).
+    # scan-budget: documents scanned 8 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     sigs = D.minhash_signatures(
         docs, num_hashes=_NUM_HASHES, shingles_df=sh
-    ).transform(pin)
+    )
     cands = D.lsh_candidate_pairs(
         docs, num_hashes=_NUM_HASHES, bands=_BANDS, signatures_df=sigs
     )
@@ -3825,7 +3820,7 @@ def dedup_quality_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # sh feeds sizes + both self-join sides: one checkpointed shingle pass
+    # scan-budget: documents scanned 4 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -4242,12 +4237,11 @@ _SCURVE_THEORY = [
 )
 def dedup_lsh_scurve_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # one corpus scan: shingles checkpoint once, signatures derive from them
-    # (see dedup_minhash_estimate_error for the rescan bill this avoids)
+    # scan-budget: documents scanned 6 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     sigs = D.minhash_signatures(
         docs, num_hashes=_NUM_HASHES, shingles_df=sh
-    ).transform(pin)
+    )
     cand = D.lsh_candidate_pairs(
         docs, num_hashes=_NUM_HASHES, bands=_BANDS, signatures_df=sigs
     ).select("doc_a", "doc_b", F.lit(True).alias("captured"))
@@ -4334,9 +4328,6 @@ def dedup_lsh_scurve_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def docs_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # base feeds canon AND the flagged join (and through it the token
-    # total): checkpoint it so the text is scanned / tokenized / md5'd
-    # exactly once — the fingerprint compute is the hot cost here.
     base = docs.select(
         "lang",
         "source",
@@ -4344,7 +4335,7 @@ def docs_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         X.token_count(F.col("text")).alias("n_tok"),
         F.md5(X.normalized_text(F.col("text"))).alias("fp"),
-    ).transform(pin)
+    ).transform(pin)  # scan-budget: documents scanned 4 times without it
     canon = base.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
     flagged = base.join(canon, "fp").select(
         "lang",
@@ -4515,8 +4506,8 @@ def ev_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    # one corpus scan: ground truth AND candidates derive from the same
-    # checkpointed shingle stream (see dedup_minhash_estimate_error)
+    # ground truth AND candidates derive from the same shingle stream
+    # scan-budget: documents scanned 6 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     truth = D.jaccard_pairs(docs, min_jaccard=0.5, shingles_df=sh).select(
         "doc_a", "doc_b"
@@ -4743,6 +4734,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
+    # scan-budget: documents scanned 4 times without it
     sh = D._doc_shingles(docs, "text", 3).transform(pin)
     # integer threshold 2·|A∩B| >= |A∪B| (not jaccard_pairs' 6-dp-rounded
     # filter: round(j,6) >= 0.5 and j >= 0.5 disagree on the boundary)
@@ -4827,7 +4819,6 @@ def dedup_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = (
         docs.select("doc_id", "n_chars").join(labels, "doc_id")
         .select("cluster_id", "doc_id", "n_chars")
-        .transform(pin)  # feeds keeper window AND the rollup
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
@@ -5061,7 +5052,6 @@ def ev_time_to_convert_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min(F.col("ts").cast("long")).alias("t0"))
-        .transform(pin)  # feeds the purchase join AND the delta
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -5193,7 +5183,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         X.token_count(F.col("text")).alias("n_tok"),
         F.md5(X.normalized_text(F.col("text"))).alias("fp"),
-    ).transform(pin)  # feeds total, exact keep, both rollups
+    ).transform(pin)  # scan-budget: documents scanned 4 times without it
     tot = toks.agg(
         F.count("*").alias("n_docs"), F.sum("n_tok").alias("t")
     )
@@ -5392,7 +5382,7 @@ def ev_funnel_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .transform(pin)  # feeds stage 2 AND the n_viewed count
+        .transform(pin)  # scan-budget: events scanned 6 times without it
     )
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -5400,7 +5390,6 @@ def ev_funnel_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("ts") > F.col("t_view")) & (F.col("ts") <= F.col("t_view") + iv))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .transform(pin)  # feeds stage 3 AND the n_clicked count
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -5529,7 +5518,7 @@ def ev_inter_event_gap_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.length(F.conv(F.col("gap"), 10, 2)))
         .cast("long")
         .alias("log2_bucket")
-    ).transform(pin)  # feeds the per-bucket count AND the grand total
+    )
     total = b.agg(F.count("*").alias("n_total"))
     return (
         b.groupBy("log2_bucket")

@@ -668,12 +668,10 @@ def li_or_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table with a same-key-different-entity residual. Spark plan: both "
     "quantifiers are orderkey-keyed LEFT SEMI / LEFT ANTI joins with the "
     "supplier-inequality as a join residual (never a correlated per-row "
-    "subquery), over ONE pinned candidate frame; top-20 is a "
+    "subquery), over ONE candidate frame; top-20 is a "
     "TakeOrdered. Counts exact; no floats anywhere.",
 )
 def supplier_return_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.scale import pin
-
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     supplier = table(spark, sf_dir, "supplier")
@@ -684,7 +682,6 @@ def supplier_return_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .select("l_orderkey", "l_suppkey")
-        .transform(pin)  # feeds both quantifier joins
     )
     l2 = li.select(
         F.col("l_orderkey").alias("k2"), F.col("l_suppkey").alias("s2")

@@ -134,7 +134,7 @@ def _int_signatures(spark: SparkSession, emb: DataFrame) -> DataFrame:
                 )
             ).alias("sig")
         )
-        .transform(pin)
+        .transform(pin)  # scan-budget: its consumers scan embeddings 5-14 times without it
     )
 
 
@@ -270,7 +270,6 @@ def sim_ann_recall_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= _ANN_K)
         .select(F.col("q.qid").alias("qid"), "vec_id")
-        .transform(pin)  # feeds the capture join AND its count
     )
 
     sigs = _int_signatures(spark, emb)
@@ -283,7 +282,6 @@ def sim_ann_recall_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cvid") != F.col("qid"))
         .select("qid", F.col("cvid").alias("vec_id"))
         .distinct()
-        .transform(pin)  # feeds capture join AND per-query count
     )
     cap = (
         topk.join(cand.withColumn("_hit", F.lit(1)), ["qid", "vec_id"], "left")
@@ -352,8 +350,7 @@ def sim_ivf_cell_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     init_rows = fixed.filter(F.col("vec_id") < _IVF_CELLS).collect()
     cents = {int(r["vec_id"]): list(r["xi_arr"]) for r in init_rows}
     best = _best_assign(cents)
-    # pinned: feeds the inventory rollup AND the probe rollup
-    cells = fixed.select("vec_id", best["lbl"].alias("cell")).transform(pin)
+    cells = fixed.select("vec_id", best["lbl"].alias("cell"))
     # probe selection needs full (query, cell) distance ranking — rebuild
     # the per-cell distances only for the _NQ query vectors (bounded rows)
     dists = fixed.filter(F.col("vec_id") < _NQ).select(

@@ -118,21 +118,20 @@ def _fact_sales(
     """Unsorted fact build — the composable form: downstream consumers
     (integrity check, region report, one-big-table) join or aggregate it,
     where a global sort is a pure range-shuffle tax at fact scale.
-    Consumers that ALSO join the dims afterwards pass their (typically
-    localCheckpoint'ed) dim frames in so each dim is built once; when the
-    dims are built here they checkpoint too — the fact build references
-    each more than once (FK resolve + the geo_of_cust bridge), and the
-    dims are broadcast-sized by nature."""
+    Consumers that ALSO join the dims afterwards pass their dim frames in
+    so each dim is defined once; the fact build references each more than
+    once (FK resolve + the geo_of_cust bridge), and the dims are
+    broadcast-sized by nature."""
     orders = table(spark, sf_dir, "orders")
     customer = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
     region = table(spark, sf_dir, "region")
 
     if dim_date is None:
-        dim_date = _dim_date(spark, sf_dir).transform(pin)
+        dim_date = _dim_date(spark, sf_dir)
     dim_date = dim_date.select("date_id", "order_date")
     if dim_geo is None:
-        dim_geo = _dim_geo(spark, sf_dir).transform(pin)
+        dim_geo = _dim_geo(spark, sf_dir)
 
     geo_of_cust = (
         customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -207,7 +206,7 @@ def star_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def star_region_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one geo build: the fact's FK resolution and the report join share it
-    dim_geo = _dim_geo(spark, sf_dir).transform(pin)
+    dim_geo = _dim_geo(spark, sf_dir)
     fact = _fact_sales(spark, sf_dir, dim_geo=dim_geo)
     return (
         fact.join(F.broadcast(dim_geo), "geo_id")
@@ -397,12 +396,12 @@ def wh_merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = table(spark, sf_dir, "orders")
     # t is both the merge target and the base the planted batch derives
-    # from (3 filtered projections): checkpoint so orders scans once
+    # from (3 filtered projections)
     t = orders.select(
         F.col("o_orderkey").alias("k"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.col("o_orderpriority").alias("prio"),
-    ).transform(pin)
+    ).transform(pin)  # scan-budget: orders scanned 4 times without it
     u = (
         t.filter((F.col("k") % 13 == 0) & (F.col("k") % 17 != 0))
         .select("k", (F.col("cents") + 1000).alias("cents"), F.lit("MERGED").alias("prio"), F.lit(False).alias("is_del"))
@@ -473,8 +472,8 @@ def star_one_big_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize each broadcast-by-nature dim ONCE (they are needed twice:
     # FK resolution inside the fact build + the wide rejoin here) — the
     # un-truncated plan rebuilt them per reference (10 scans at r03).
-    dd = _dim_date(spark, sf_dir).transform(pin)
-    dg = _dim_geo(spark, sf_dir).transform(pin)
+    dd = _dim_date(spark, sf_dir)
+    dg = _dim_geo(spark, sf_dir)
     fact = _fact_sales(spark, sf_dir, dim_date=dd, dim_geo=dg)
     return (
         fact.join(F.broadcast(dd), "date_id", "left")

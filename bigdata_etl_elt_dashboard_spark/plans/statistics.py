@@ -210,12 +210,10 @@ def stat_ols_price_vs_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stat_mad_outlier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
-    # c feeds the median pass AND the deviation join (which itself feeds
-    # two consumers): checkpoint the 2-column quantized frame → one scan
     c = orders.select(
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    ).transform(pin)
+    ).transform(pin)  # scan-budget: orders scanned 4 times without it
     med = c.groupBy("o_orderstatus").agg(
         F.round(F.expr("percentile(cents, 0.5)")).cast("long").alias("med_c")
     )
@@ -713,15 +711,12 @@ def stat_bloom_customer_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             % _BF_BITS
         ).alias("pos")
 
-    # members / bits / pos_keys each feed 2-3 frames (build, stats, the
-    # anti-join): checkpoint them so orders is scanned once and the ≤m-row
-    # bit table is built once — not re-derived per scalar-combine reference.
     members = (
         orders.select(F.col("o_custkey").alias("key"))
         .distinct()
-        .transform(pin)
+        .transform(pin)  # scan-budget: orders scanned 5 times without it
     )
-    bits = members.select("key", rs).select(pos_col()).distinct().transform(pin)
+    bits = members.select("key", rs).select(pos_col()).distinct()
     probe = cust.select(F.col("c_custkey").alias("key"), rs).select(
         "key", "r", pos_col()
     )
@@ -731,7 +726,6 @@ def stat_bloom_customer_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("r").alias("nr"))
         .filter(F.col("nr") == _BF_HASHES)
         .select("key")
-        .transform(pin)
     )
     s = (
         members.agg(F.count("*").alias("n_members"))
@@ -1415,13 +1409,11 @@ def stat_cusum_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def li_basket_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    # ot feeds four frames (n, tc, and both self-join sides): checkpoint the
-    # distinct (order, type) projection so lineitem⋈part runs once, not 4×.
     ot = (
         li.join(part, li.l_partkey == part.p_partkey)
         .select("l_orderkey", "p_type")
         .distinct()
-        .transform(pin)
+        .transform(pin)  # scan-budget: lineitem and part scanned 5 times without it
     )
     n = ot.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     tc = ot.groupBy("p_type").agg(F.count("*").alias("c"))
@@ -1914,7 +1906,7 @@ def trend_locf_daily_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("s"),
         F.count("*").alias("n"),
-    ).transform(pin)  # feeds bounds, the grid, and the join
+    )
     b = daily.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
     grid = (
         daily.select("priority")
@@ -2216,7 +2208,7 @@ def stat_mann_kendall_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     orders = table(spark, sf_dir, "orders")
     d = orders.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("c")
-    ).transform(pin)  # feeds the pair join (twice), n, and the tie rollup
+    ).transform(pin)  # scan-budget: orders scanned 4 times without it
     a = d.select(F.col("day").alias("day_a"), F.col("c").alias("c_a"))
     b = d.select(F.col("day").alias("day_b"), F.col("c").alias("c_b"))
     s = (
@@ -2417,7 +2409,6 @@ def stat_theilsen_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
         )
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("c"))
-        .transform(pin)  # feeds the pair self-join (twice) and n_months
     )
     a = m.select(F.col("t").alias("t1"), F.col("c").alias("c1"))
     b = m.select(F.col("t").alias("t2"), F.col("c").alias("c2"))
@@ -2506,7 +2497,6 @@ def stat_kendall_tau_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFra
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("x"),
             F.count("*").alias("y"),
         )
-        .transform(pin)  # feeds both pair-join sides and the n_days scalar
     )
     a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"), F.col("y").alias("yb"))
@@ -2601,7 +2591,7 @@ def ev_markov_3step_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = Window.partitionBy("src")
     p = pairs.select(
         "src", "dst", "n", F.sum("n").over(tot).alias("n_src")
-    ).transform(pin)  # the matrix feeds all three propagation rounds
+    ).transform(pin)  # scan-budget: events scanned 4 times without it
     m = p.select("src").distinct().select(
         F.col("src").alias("event_type"),
         F.expr(
@@ -2776,7 +2766,6 @@ def stat_bootstrap_ci_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFra
             (F.row_number().over(Window.orderBy("day")) - 1).alias("j"),
             F.count("*").over(Window.partitionBy()).alias("n"),
         )
-        .transform(pin)  # feeds grid generation, the draw join, and obs/n
     )
     grid = d.select(
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_REPS - 1))).alias("r"),

@@ -224,6 +224,7 @@ def ev_click_view_full_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import range_join
 
     ev = table(spark, sf_dir, "events")
+    # scan-budget: events scanned 4 times without it
     base = pin(
         ev.filter(F.col("event_type").isin("click", "view")).select(
             "event_id", "user_id", "ts", "event_type", "value"

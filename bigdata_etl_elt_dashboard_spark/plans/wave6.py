@@ -17,8 +17,7 @@ integer cross-multiplication, never a float ratio.
 
 At 100 TB: each query is one partial-aggregatable keyed shuffle over the
 fact table plus dim joins that stay broadcastable (part/supplier/nation/
-region scale with the catalog, not the fact stream); multi-consumer
-aggregate frames are `pin()`-ed so no base table is scanned twice.
+region scale with the catalog, not the fact stream).
 """
 
 from __future__ import annotations
@@ -74,8 +73,8 @@ def _unit_cents(ep: str = "l_extendedprice", qty: str = "l_quantity") -> F.Colum
     "correlated subquery decorrelates into two keyed aggregates — offers "
     "per (part, supplier), then the per-part MIN — and an equi-join back "
     "on (partkey, min); ties keep every winning supplier, exactly Q2's "
-    "semantics. The offers frame is pin()-ed (two consumers), so lineitem "
-    "is scanned once; part/supplier/nation/region joins broadcast. "
+    "semantics. The offers frame has two consumers; "
+    "part/supplier/nation/region joins broadcast. "
     "Ordering is total (acctbal DESC, then unique supplier/part keys).",
 )
 def part_min_cost_supplier_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,7 +82,6 @@ def part_min_cost_supplier_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     offers = (
         li.groupBy("l_partkey", "l_suppkey")
         .agg(F.min(_unit_cents()).alias("unit_cents"))
-        .transform(pin)
     )
     best = (
         offers.groupBy("l_partkey")
@@ -133,8 +131,8 @@ def part_min_cost_supplier_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"{_SHARE_DENOM} of their supplying nation's total traded value. "
     "Value per (nation, part) is one partial-aggregatable shuffle (the "
     "supplier join broadcasts before it, attaching the nation key to the "
-    "fact stream); the nation totals reduce the pinned val frame — "
-    "lineitem is scanned once — and join back keyed on nation (25 rows, "
+    "fact stream); the nation totals reduce the same val frame "
+    "and join back keyed on nation (25 rows, "
     "broadcast). The threshold compares integer cents by "
     "cross-multiplication; no float division anywhere.",
 )
@@ -145,7 +143,6 @@ def supplier_important_share_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .groupBy("s_nationkey", "l_partkey")
         .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("val_cents"))
-        .transform(pin)
     )
     tot = val.groupBy("s_nationkey").agg(F.sum("val_cents").alias("tot_cents"))
     nat = table(spark, sf_dir, "nation")
@@ -391,8 +388,8 @@ def stat_anova_f_price_by_priority(spark: SparkSession, sf_dir: str) -> DataFram
     "— the scale argument for the single ordered cumulative window over "
     "it), where doubled midranks 2R = 2·(#smaller) + count + 1 stay "
     "integral. Per-group doubled rank sums Σc·2R are exact BIGINTs from "
-    "one keyed shuffle over the pinned (value, priority) counts (orders "
-    "scanned once); H evaluates on the 5-literal pivot in a fixed IEEE "
+    "one keyed shuffle over the (value, priority) counts; H evaluates "
+    "on the 5-literal pivot in a fixed IEEE "
     "sequence, and the tie term Σ(t³−t) is an exact BIGINT (switch to "
     "DECIMAL(38,0) past ~2e6 rows of one value). 1-row tie frame joins "
     "by bounded cross join.",
@@ -407,9 +404,8 @@ def stat_kruskal_wallis_price_by_priority(spark: SparkSession, sf_dir: str) -> D
     counts = (
         o.groupBy(v.alias("v"), F.col("o_orderpriority").alias("pr"))
         .agg(F.count("*").alias("c"))
-        .transform(pin)
     )
-    vals = counts.groupBy("v").agg(F.sum("c").alias("cv")).transform(pin)
+    vals = counts.groupBy("v").agg(F.sum("c").alias("cv"))
     # ordered cumulative over the bounded distinct-value frame
     cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     mr = vals.select(
@@ -979,8 +975,7 @@ _STOPWORDS = ("a", "the")
     "Blocks explode JVM-side (split + slice over a pre-projected token "
     "array — linear in tokens); the frequency rollup and the join back "
     "are both keyed on the block hash, so the plan is two shuffles on "
-    "md5-distributable keys — no pairwise comparison anywhere. The "
-    "block-instance frame is pinned: documents is scanned once.",
+    "md5-distributable keys — no pairwise comparison anywhere.",
 )
 def docs_block_dedup_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
@@ -1011,7 +1006,6 @@ def docs_block_dedup_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice(F.col("tk"), F.col("b") * _BLOCK_W + 1, _BLOCK_W), " "
             ).alias("blk"),
         )
-        .transform(pin)
     )
     freq = blocks.groupBy("blk").agg(F.count("*").alias("c"))
     dup = F.sum(F.when(F.col("c") > 1, 1).otherwise(0))
@@ -1122,7 +1116,7 @@ _TFIDF_K = 5
     doc=f"TF-IDF top-{_TFIDF_K} distinguishing terms per source: term "
     "frequencies per (source, term) in one keyed shuffle, document "
     "frequencies (sources containing the term) reduced from that same "
-    "pinned frame (documents scanned once), idf = q(log2 ns) − "
+    "frame, idf = q(log2 ns) − "
     "q(log2 df) in exact micro-bits (the corpus-wide micro-bit log "
     "discipline — quantized log2 of INTEGER counts, so both engines "
     "round the same libm-exact values), score = tf·idf as exact BIGINT "
@@ -1134,7 +1128,7 @@ def docs_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(F.split("text", " ")).alias("term"))
-    tf = tok.groupBy("source", "term").agg(F.count("*").alias("tf")).transform(pin)
+    tf = tok.groupBy("source", "term").agg(F.count("*").alias("tf"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     nsrc = tf.agg(F.countDistinct("source").alias("ns"))
     qlog = lambda col: F.round(F.log2(col.cast("double")) * F.lit(1000000)).cast("long")
@@ -1207,7 +1201,7 @@ _KNNG_K = 5
     "dimension-keyed join — partial-aggregated dots, never a row×row "
     "array shuffle), then score what fraction of edges are reciprocated "
     "(a standard embedding-health probe: low reciprocity = hubness). "
-    "The edge frame pins once and joins itself on the reversed key — "
+    "The edge frame joins itself on the reversed key — "
     "hash equi-join, no second distance pass. The probe stratum bounds "
     "the quadratic candidate space; the production-scale path for the "
     "full corpus is the LSH/IVF bucketed candidate join the ANN family "
@@ -1222,7 +1216,7 @@ def emb_knn_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         emb.select("vec_id", "label", F.posexplode(_to_fixed(F.col("embedding"))))
         .withColumnsRenamed({"col": "xi"})
-        .transform(pin)
+        .transform(pin)  # scan-budget: embeddings scanned 4 times without it
     )
     a = pts.select(
         F.col("vec_id").alias("src"), F.col("label").alias("src_label"), "pos",
@@ -1243,7 +1237,6 @@ def emb_knn_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2.withColumn("_rn", F.row_number().over(wk))
         .filter(F.col("_rn") <= _KNNG_K)
         .select("src", "src_label", "dst")
-        .transform(pin)
     )
     rev = edges.select(F.col("src").alias("r_src"), F.col("dst").alias("r_dst"))
     mutual = edges.join(
@@ -1317,7 +1310,6 @@ def emb_simplified_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         emb.select("vec_id", "label", F.posexplode(_to_fixed(F.col("embedding"))))
         .withColumnsRenamed({"col": "xi"})
-        .transform(pin)
     )
     cent = pts.groupBy(F.col("label").alias("clabel"), F.col("pos")).agg(
         F.round(F.avg("xi")).cast("long").alias("mi")
@@ -1518,7 +1510,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
         pc.orderBy(F.desc("w"), "x", "y")
         .limit(_LP_EDGES)
         .select("x", "y")
-        .transform(pin)
+        .transform(pin)  # scan-budget: lineitem scanned 18 times without it
     )
     nbr = e.select(F.col("x").alias("w"), F.col("y").alias("n")).unionAll(
         e.select(F.col("y").alias("w"), F.col("x").alias("n"))
@@ -1605,6 +1597,7 @@ def dq_histogram_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_DRIFT_N_BUCKETS - 1),
     ).cast("long")
     hist = (
+        # scan-budget: orders scanned 8 times without it
         o.groupBy(mi.alias("mi"), b.alias("b")).agg(F.count("*").alias("c")).transform(pin)
     )
     months = hist.select("mi").distinct()
@@ -1613,7 +1606,6 @@ def dq_histogram_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
         months.select("mi", buckets)
         .join(hist, ["mi", "b"], "left")
         .select("mi", "b", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
-        .transform(pin)
     )
     tot = dense.groupBy("mi").agg(F.sum("c").alias("n"))
     cur = dense
@@ -1738,7 +1730,7 @@ _LATE_DAYS = 60
     "EXISTS/NOT-EXISTS pair decorrelates into one (order, supplier) "
     "late-flag aggregate (one fact-fact shuffle on the order key — the "
     "orders date lookup rides the same key) plus an order-level rollup "
-    "of that pinned frame, joined back — no correlated re-scans. "
+    "of that frame, joined back — no correlated re-scans. "
     "supplier/nation broadcast; top-20 with the s_name tie-break.",
 )
 def supplier_late_blame_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1753,7 +1745,6 @@ def supplier_late_blame_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("l_orderkey", "l_suppkey")
         .agg(late.alias("late"))
-        .transform(pin)
     )
     oc = sp.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count("*").alias("n_supps"), F.sum("late").alias("n_late")
@@ -1991,7 +1982,7 @@ _STATUSES = ("O", "F", "P")
     "cumulative count reaches n), absolute deviations stay integral, "
     "and the one-way ANOVA F over them evaluates on the 3-status "
     "literal pivot in fixed IEEE order. ONE scan of orders builds the "
-    "pinned (status, value, count) frame; medians AND deviation moments "
+    "(status, value, count) frame; medians AND deviation moments "
     "both derive from it — no second pass.",
 )
 def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2006,7 +1997,6 @@ def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice")).cast("long").alias("v"),
         )
         .agg(F.count("*").alias("c"))
-        .transform(pin)
     )
     wcum = Window.partitionBy("st").orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.partitionBy("st")
@@ -2096,7 +2086,6 @@ def trend_ewma32_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"))
-        .transform(pin)
     )
     lags = daily.sparkSession.range(_EWMA_H).select(F.col("id").cast("int").alias("k"))
     cur = daily.select(F.col("day"), F.lit(1).alias("_one"))
@@ -2163,7 +2152,7 @@ def part_pair_association_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
-        .transform(pin)
+        .transform(pin)  # scan-budget: lineitem scanned 5 times without it
     )
     nn = li.agg(F.countDistinct("o").alias("n_orders"))
     singles = li.groupBy("p").agg(F.count("*").alias("cp"))
@@ -2315,12 +2304,13 @@ def stat_approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFra
     # sweep — the contract booleans went false on null-bearing data)
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice").isNotNull())
     v = F.round(F.col("o_totalprice")).cast("long")
+    # scan-budget: orders scanned 8 times without it
     g = o.groupBy(v.alias("v")).agg(F.count("*").alias("cnt")).transform(pin)
     cum = g.select(
         "v",
         F.sum("cnt").over(Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)).alias("c"),
         F.sum("cnt").over(Window.partitionBy()).alias("n"),
-    ).transform(pin)
+    )
     exact = cum.agg(
         F.max("n").alias("n_rows"),
         F.min(F.when(F.expr("c >= (n * 50 + 99) div 100"), F.col("v"))).alias("exact_p50"),
@@ -2420,7 +2410,6 @@ def trend_decomposition_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.month("o_orderdate")).cast("long").alias("moy"),
             F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"),
         )
-        .transform(pin)
     )
     w13 = Window.orderBy("mi").rowsBetween(-6, 6)
     tr = monthly.select(
@@ -2430,7 +2419,7 @@ def trend_decomposition_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = tr.filter(F.col("nw") == 13).select(
         "mi", "moy", "y", "t13", (13 * F.col("y") - F.col("t13")).alias("dev13")
-    ).transform(pin)
+    )
     seas = dev.groupBy("moy").agg(
         F.sum("dev13").alias("sdev"), F.count("*").alias("nyears")
     )
@@ -2568,7 +2557,7 @@ def stat_group_quantiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFr
     "days, and streams without reprocessing; a partial-aggregation or "
     "register-layout regression flips the boolean. Same md5-based "
     "engine-exact register algebra as stat_hll_distinct_custkeys; one "
-    "scan feeds the pinned per-month register table.",
+    "scan feeds the per-month register table.",
 )
 def stat_hll_monthly_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
@@ -2587,9 +2576,8 @@ def stat_hll_monthly_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(55) - F.length(F.conv(F.expr("hv div 64"), 10, 2)))
             .alias("r"),
         )
-        .transform(pin)
     )
-    monthly = rho.groupBy("mi", "bucket").agg(F.max("r").alias("m_j")).transform(pin)
+    monthly = rho.groupBy("mi", "bucket").agg(F.max("r").alias("m_j"))
     base = spark.range(64).withColumnRenamed("id", "bucket")
     merged = (
         base.join(monthly.groupBy("bucket").agg(F.max("m_j").alias("mx")), "bucket", "left")
@@ -2705,7 +2693,6 @@ def ev_simpsons_paradox_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("variant") == 1, 1).otherwise(0)).alias("n_b"),
             F.sum(F.when(F.col("variant") == 1, F.col("converted")).otherwise(0)).alias("c_b"),
         )
-        .transform(pin)
     )
     pooled = seg.agg(
         F.lit("pooled").alias("segment"),
@@ -2713,7 +2700,7 @@ def ev_simpsons_paradox_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_a").alias("c_a"),
         F.sum("n_b").alias("n_b"),
         F.sum("c_b").alias("c_b"),
-    ).transform(pin)
+    )
     allrows = seg.unionByName(pooled)
     sign = lambda ca, nb, cb, na: (
         F.when(ca * nb > cb * na, 1).when(ca * nb < cb * na, -1).otherwise(0)
@@ -2860,6 +2847,7 @@ def src_csv_malformed_recovery_digest(spark: SparkSession, sf_dir: str) -> DataF
 def ev_replay_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     replayed = ev.filter(F.col("event_id") % 7 == 0)
+    # scan-budget: events scanned 4 times without it
     delivered = ev.unionAll(replayed).transform(pin)
     n_delivered = delivered.agg(F.count("*").alias("n_delivered"))
     deduped = delivered.dropDuplicates(["event_id"])
@@ -2954,7 +2942,7 @@ def stat_cms_part_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("row_idx", "col_idx")
         .agg(F.count("*").alias("c"))
     )
-    truth = li.groupBy("l_partkey").agg(F.count("*").alias("true_cnt")).transform(pin)
+    truth = li.groupBy("l_partkey").agg(F.count("*").alias("true_cnt"))
     top = truth.orderBy(F.desc("true_cnt"), "l_partkey").limit(10)
     probes = top.crossJoin(F.broadcast(rows)).select(
         "l_partkey", "true_cnt", "row_idx", col_idx
@@ -3023,7 +3011,7 @@ _KMVI_K = 256
     f"{_KMVI_K} smallest distinct md5 hashes of customers active in "
     "1996 OR 1997 form the union sketch; the Jaccard estimate is the "
     "fraction of sketch members active in BOTH years, compared against "
-    "the exact Jaccard from the same pinned year-flag frame. This is "
+    "the exact Jaccard from the same year-flag frame. This is "
     "the sketch algebra that answers intersection/overlap questions "
     "(audience overlap, split contamination) at 100 TB without holding "
     "either set: sketches union by keeping the k smallest of a merged "
@@ -3043,7 +3031,6 @@ def stat_kmv_intersection_years(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("yr") == 1996, 1).otherwise(0)).alias("in96"),
             F.max(F.when(F.col("yr") == 1997, 1).otherwise(0)).alias("in97"),
         )
-        .transform(pin)
     )
     hashed = flags.select(
         F.conv(F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15), 16, 10)
@@ -3104,7 +3091,7 @@ def ev_rolling28_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     du = ev.select(
         F.col("ts").cast("date").alias("day"), "user_id"
-    ).distinct().transform(pin)
+    ).distinct()
     days = du.select("day").distinct()
     lags = ev.sparkSession.range(28).select(F.col("id").cast("int").alias("k"))
     win = (
@@ -3207,7 +3194,7 @@ def ev_funnel_anyorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ledger sibling of the event-stream cohort retention): customers "
     "cohorted by first-order year, revenue and repeat-buyer counts per "
     "(cohort, order year). Two keyed shuffles — the per-customer first-"
-    "year rollup (pinned) and the cohort matrix — with the firsts frame "
+    "year rollup and the cohort matrix — with the firsts frame "
     "joined back customer-keyed (at 100 TB it shuffles on the same key "
     "as the fact aggregation, so AQE co-locates). Exact cents.",
 )
@@ -3216,7 +3203,6 @@ def cust_order_cohort_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     firsts = (
         o.groupBy("o_custkey")
         .agg(F.min(F.year("o_orderdate")).cast("long").alias("cohort_year"))
-        .transform(pin)
     )
     return (
         o.join(firsts.withColumnRenamed("o_custkey", "ck"), o.o_custkey == F.col("ck"))
@@ -3384,7 +3370,7 @@ def src_dynamic_partition_overwrite_digest(spark: SparkSession, sf_dir: str) -> 
     "league-table movement readout (who climbed, who slid): nation "
     "revenue per year in one fact shuffle (dims broadcast), per-year "
     "dense ranking with a name tie-break for a total order, and the "
-    "two years self-joined on the pinned 25-nation frame. Movement is "
+    "two years self-joined on the 25-nation frame. Movement is "
     "exact integer rank arithmetic; ordering by gain with a name "
     "tie-break.",
 )
@@ -3403,7 +3389,6 @@ def nation_revenue_rank_migration(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", F.year("o_orderdate").cast("long").alias("yr"))
         .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev_cents"))
-        .transform(pin)
     )
     rk = F.row_number().over(
         Window.partitionBy("yr").orderBy(F.desc("rev_cents"), "n_name")
@@ -3469,7 +3454,6 @@ def li_pareto_cum_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = (
         li.groupBy("l_partkey")
         .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev"))
-        .transform(pin)
     )
     wo = Window.orderBy(F.desc("rev"), "l_partkey")
     # row_number() is IntegerType; the ppm share multiplies rk by 1e6, which
@@ -3693,8 +3677,7 @@ def _multiprobe_oracle() -> str:
     "of single-probe, and recall never drops. Same micro-quantized "
     "integer signature algebra as the ANN digest family (planes as "
     "broadcast data, signature-keyed equi-joins, never all-pairs); "
-    "embeddings scanned twice (signatures + truth kernel), both "
-    "pinned.",
+    "embeddings scanned twice (pinned signatures + truth kernel).",
 )
 def sim_ann_multiprobe_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -3707,8 +3690,9 @@ def sim_ann_multiprobe_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     qsig = sigs.filter(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("qid"), "table_id", "sig"
     )
-    js = spark.range(_ANN_BITS + 1).select(F.col("id").cast("int").alias("j"))
-    probes = qsig.crossJoin(F.broadcast(js)).select(
+    probes = qsig.select(
+        "qid", "table_id", "sig", F.explode(F.sequence(F.lit(0), F.lit(_ANN_BITS))).alias("j")
+    ).select(
         "qid",
         "table_id",
         F.when(F.col("j") == _ANN_BITS, F.col("sig"))
@@ -3723,9 +3707,9 @@ def sim_ann_multiprobe_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("s2") == F.col("sig"))
         & (F.col("vec_id") != F.col("qid")),
     )
-    cand_multi = joined.select("qid", "vec_id").distinct().transform(pin)
+    cand_multi = joined.select("qid", "vec_id").distinct()
     cand_single = (
-        joined.filter(F.col("exact_probe")).select("qid", "vec_id").distinct().transform(pin)
+        joined.filter(F.col("exact_probe")).select("qid", "vec_id").distinct()
     )
     pts = emb.select(
         "vec_id", F.posexplode(_to_fixed(F.col("embedding")))
@@ -3746,13 +3730,10 @@ def sim_ann_multiprobe_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") <= _ANN_K)
         .select("qid", "vec_id")
     )
-    # r15 (guide §3.1): every tail-join side below is bounded by the _NQ=20
-    # query set (candidate lists, per-qid counts) but rides a pinned frame
-    # whose stats the planner does not trust — it planned SIX SortMergeJoins
-    # for joins whose build sides are a few hundred rows. Explicit
-    # broadcasts: SMJ 6 → 0, measured −18% warm-noop interleaved in r14,
-    # settled by the r15 same-session-position bench A/B
-    # (OPTIMIZATION_r15.md). Join strategy never changes join semantics.
+    # every tail-join side below is bounded by the _NQ=20 query set
+    # (candidate lists, per-qid counts), but the planner cannot see that
+    # and plans SortMergeJoins; explicit broadcasts keep them off it.
+    # Join strategy never changes join semantics.
     per_q = (
         topk.join(
             F.broadcast(
@@ -4011,14 +3992,13 @@ def graph_katz_centrality_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("o") == F.col("o2")) & (F.col("x") != F.col("y")))
         .select("x", "y")
         .distinct()
-        .transform(pin)
+        .transform(pin)  # scan-budget: lineitem scanned 12 times without it
     )
-    w1 = e.groupBy(F.col("x").alias("node")).agg(F.count("*").alias("c")).transform(pin)
+    w1 = e.groupBy(F.col("x").alias("node")).agg(F.count("*").alias("c"))
     w2 = (
         e.join(w1.withColumnRenamed("node", "y1"), F.col("y1") == e.y)
         .groupBy(F.col("x").alias("node"))
         .agg(F.sum("c").alias("c"))
-        .transform(pin)
     )
     w3 = (
         e.join(
@@ -4097,7 +4077,7 @@ _MRL_K = 5
     "exact-integer prefix recall.) Both distance fields compute in ONE "
     "dimension-keyed pass (the prefix sum is a CASE inside the same "
     "aggregate — no second join), both top-k selections run on the "
-    "pinned distance frame with deterministic tie-breaks, and recall "
+    "distance frame with deterministic tie-breaks, and recall "
     "is a count ratio. Bounded query set; corpus-linear. On THIS "
     "synthetic corpus the vectors are near-isotropic random, so prefix "
     "recall sits near the random baseline (~0-2 of 5) — the honest "
@@ -4114,7 +4094,7 @@ def emb_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         emb.select("vec_id", F.posexplode(_to_fixed(F.col("embedding"))))
         .withColumnsRenamed({"col": "xi"})
-        .transform(pin)
+        .transform(pin)  # scan-budget: embeddings scanned 4 times without it
     )
     qp = pts.filter(F.col("vec_id") < _MRL_NQ).select(
         F.col("vec_id").alias("qid"), "pos", F.col("xi").alias("qi")
@@ -4130,7 +4110,6 @@ def emb_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "d_prefix"
             ),
         )
-        .transform(pin)
     )
     sel = lambda col: F.row_number().over(Window.partitionBy("qid").orderBy(col, "vec_id"))
     top_full = d2.withColumn("_r", sel(F.col("d_full"))).filter(F.col("_r") <= _MRL_K)
@@ -4355,7 +4334,7 @@ def stat_weekly_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("week", F.col("o_orderdate").cast("date")).cast("date").alias("wk"),
         F.col("o_orderdate").cast("date").alias("day"),
     ).agg(F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"))
-    maxima = daily.groupBy("wk").agg(F.max("y").alias("block_max")).transform(pin)
+    maxima = daily.groupBy("wk").agg(F.max("y").alias("block_max"))
     g = maxima.groupBy(F.col("block_max").alias("v")).agg(F.count("*").alias("cnt"))
     cum = g.select(
         "v",
@@ -4427,6 +4406,7 @@ def graph_ktruss_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x", "y")
         .agg(F.count("*").alias("w"))
     )
+    # scan-budget: lineitem scanned 18 times without it
     e = pc.orderBy(F.desc("w"), "x", "y").limit(20000).select("x", "y").transform(pin)
     e2 = e.select(F.col("x").alias("x2"), F.col("y").alias("y2"))
     e3 = e.select(F.col("x").alias("x3"), F.col("y").alias("y3"))
@@ -4577,6 +4557,7 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("x", "y")
         .agg(F.count("*").alias("w"))
     )
+    # scan-budget: lineitem scanned 10 times without it
     e = pc.orderBy(F.desc("w"), "x", "y").limit(20000).select("x", "y").transform(pin)
     deg = (
         e.select(F.col("x").alias("node"))
@@ -4633,7 +4614,7 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "self-join (same weekday — removes the dominant weekly cycle), "
     "positives and non-ties count exactly in integer cents, and the "
     "continuity-corrected normal z evaluates in one fixed IEEE "
-    "sequence. One scan; the pair join runs on the pinned calendar-"
+    "sequence. One scan; the pair join runs on the calendar-"
     "bounded daily frame.",
 )
 def stat_sign_test_paired_months(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4641,7 +4622,6 @@ def stat_sign_test_paired_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"))
-        .transform(pin)
     )
     prev = daily.select(F.col("day").alias("pday"), F.col("y").alias("yp"))
     paired = daily.join(prev, F.expr("pday = date_sub(day, 28)"))
@@ -4719,7 +4699,6 @@ def emb_ivf_cell_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = (
         emb.select("vec_id", F.posexplode(_to_fixed(F.col("embedding"))))
         .withColumnsRenamed({"col": "xi"})
-        .transform(pin)
     )
     cents = pts.filter(F.col("vec_id") < _PURITY_CELLS).select(
         F.col("vec_id").alias("cell"), "pos", F.col("xi").alias("mi")
@@ -4857,7 +4836,7 @@ def stat_mad_robust_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"))
-        .transform(pin)
+        .transform(pin)  # scan-budget: orders scanned 4 times without it
     )
 
     def lower_median(df, col):
@@ -4874,7 +4853,7 @@ def stat_mad_robust_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = lower_median(daily, "y")
     dev = daily.crossJoin(F.broadcast(med)).select(
         "day", "y", F.abs(F.col("y") - F.col("m")).alias("ad")
-    ).transform(pin)
+    )
     mad = lower_median(dev, "ad").withColumnRenamed("m", "mad")
     return (
         dev.crossJoin(F.broadcast(mad))
@@ -4929,7 +4908,7 @@ def trend_backtest_snaive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"))
-        .transform(pin)
+        .transform(pin)  # scan-budget: orders scanned 4 times without it
     )
     prev7 = daily.select(F.col("day").alias("p7"), F.col("y").alias("y7"))
     f = daily.join(prev7, F.expr("p7 = date_sub(day, 7)")).select(
@@ -5036,7 +5015,6 @@ def stat_ljung_box_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum(F.round(F.col("o_totalprice")).cast("long")).alias("y"))
-        .transform(pin)
     )
     base = daily.agg(
         F.count("*").alias("n"), F.sum("y").alias("s"), F.sum(F.col("y") * F.col("y")).alias("syy")
@@ -5317,13 +5295,13 @@ def scale_zorder_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             spread16(F.col("ck")).bitwiseOR(F.shiftleft(spread16(F.col("di")), 1))
         ).alias("zval"),
-    ).transform(pin)
+    )
     bucketed = z.select(
         "ck",
         "di",
         F.ntile(_ZORD_FILES).over(Window.orderBy("zval", "o_orderkey")).alias("zfile"),
         F.ntile(_ZORD_FILES).over(Window.orderBy("di", "o_orderkey")).alias("dfile"),
-    ).transform(pin)
+    )
 
     def stats(file_col, name):
         per = bucketed.groupBy(file_col).agg(

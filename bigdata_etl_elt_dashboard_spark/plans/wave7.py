@@ -376,16 +376,15 @@ def forecast_revenue_change_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     "volume) → connected components over the VERIFIED edges → one "
     "keeper per cluster with its member count. This composes what the "
     "per-stage queries (dedup_lsh_candidates, dedup_jaccard_pairs, "
-    "dedup_clusters) gate in isolation, with the shingle stream pinned "
-    "once and shared by the signature build, the size table, and both "
-    "verify probes — the corpus is scanned and shingled exactly once. "
+    "dedup_clusters) gate in isolation, with one shingle stream shared "
+    "by the signature build, the size table, and both verify probes. "
     "Verification prunes band-collision false positives BEFORE the "
     "iterative CC, so cluster state is bounded by true near-dups. "
     "Oracle: the same pipeline as one recursive-CTE program.",
 )
 def dedup_verified_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    sh = D._doc_shingles(docs, "text", 3).transform(pin)
+    sh = D._doc_shingles(docs, "text", 3)
     sigs = D.minhash_signatures(docs, num_hashes=_NUM_HASHES, shingles_df=sh)
     # bucket_cap (r14): bounds the pre-verify multiplicity term on
     # duplicate-saturated corpora; a no-op on every gate corpus (max
@@ -397,7 +396,7 @@ def dedup_verified_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_BANDS,
         signatures_df=sigs,
         bucket_cap=D.DEFAULT_BUCKET_CAP,
-    ).transform(pin)
+    )
     verified = D.verify_candidates(sh, cand, min_jaccard=0.5)
     edges = verified.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -497,7 +496,7 @@ def docs_shuffle_order_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pos = global_rank(
         docs.select("doc_id", hv), ["hv", "doc_id"], out_col="rn"
-    ).transform(pin)
+    )
     n = pos.agg(F.max("rn").alias("n")).collect()[0]["n"]
     return pos.agg(
         F.count("*").alias("n_docs"),
@@ -542,7 +541,7 @@ def docs_rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale.global_rank (as the doc promises and the sibling plans do) —
     # never a bare unpartitioned row_number window, the single-task global
     # sort. global_rank orders ascending, so ranking 1 (n_chars DESC) rides
-    # a negated key. Base is pinned: three consumers, one scan.
+    # a negated key.
     base = (
         table(spark, sf_dir, "documents")
         .select(
@@ -551,7 +550,6 @@ def docs_rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             (-F.col("n_chars")).alias("_neg_chars"),
             hv.alias("_hv"),
         )
-        .transform(pin)
     )
     r1 = global_rank(
         base.select("doc_id", "_neg_chars"), ["_neg_chars", "doc_id"], out_col="r1"
@@ -605,7 +603,7 @@ def docs_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     pos = global_rank(
         docs.select("doc_id", "n_chars"), ["n_chars", "doc_id"], out_col="rn"
-    ).transform(pin)
+    )
     n = pos.agg(F.count("*").alias("n"))
     # integer `div`, not true-division-then-cast: / routes through DOUBLE,
     # which stops being exact past 2^53 — rank products get there at scale
@@ -657,7 +655,6 @@ def ev_retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("week", F.col("ts").cast("date")).cast("date").alias("wk"),
         )
         .distinct()
-        .transform(pin)
     )
     cohort = uw.groupBy("user_id").agg(F.min("wk").alias("cohort_wk"))
     k = F.expr("datediff(wk, cohort_wk) div 7").alias("k")
@@ -713,7 +710,6 @@ def li_proportional_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     strata = (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(F.count("*").alias("n_h"))
-        .transform(pin)
     )
     tot = strata.agg(F.sum("n_h").alias("n"))
     quota = strata.join(F.broadcast(tot)).select(
@@ -780,7 +776,7 @@ def li_proportional_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "product (the statistics-module overflow convention — daily cents "
     "squared passes 2^63 near sf1), and each correlation is the "
     "closed-form ratio evaluated in ONE fixed double sequence. The "
-    "daily frame is pinned and scanned once; the ≤4-row lag frame "
+    "daily frame is scanned once; the ≤4-row lag frame "
     "broadcasts (bounded fan-out); pair alignment is a date-keyed "
     "equi-join, so the whole CCF costs one rollup + one bounded join "
     "regardless of SF.",
@@ -794,7 +790,6 @@ def stat_cross_correlation_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("x"),
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y"),
         )
-        .transform(pin)
     )
     lags = spark.range(4).select(F.col("id").cast("int").alias("k"))
     a = daily.select("day", "x")
@@ -899,7 +894,6 @@ def trend_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.row_number().over(Window.orderBy("day")) - 1).alias("i"),
             F.col("v").alias("a"),
         )
-        .transform(pin)
     )
     cur = base
     outs = []
@@ -912,7 +906,7 @@ def trend_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(F.col("i") % 2 == 0, F.col("a")).otherwise(-F.col("a"))
                 ).alias("d"),
             )
-            .transform(pin)
+            .transform(pin)  # iteration: cuts lineage once per level
         )
         outs.append(
             nxt.agg(
@@ -973,7 +967,6 @@ def stat_weighted_quartiles_unit_price(spark: SparkSession, sf_dir: str) -> Data
     vals = (
         li.groupBy(v.alias("v"))
         .agg(F.sum(F.round(F.col("l_quantity")).cast("long")).alias("w"))
-        .transform(pin)
     )
     cum = vals.select(
         "v",

@@ -27,7 +27,7 @@ on both engines); no float enters any aggregate.
 
 At 100 TB: the twin is one window shuffle on user_id plus a broadcast
 1-row max; the capstone inherits its stages' shapes — the corpus is
-shingled ONCE (pinned), candidate work is Σ|shingles| over LSH-banded
+shingled ONCE, candidate work is Σ|shingles| over LSH-banded
 candidates (never all-pairs), CC iterations ride pinned frames, the
 allocation works on a per-language aggregate (≤ #languages rows on the
 driver-side none — it stays a broadcastable frame), and curriculum
@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.scale import pin
 from ..sources.catalog import table
 from .registry import register
 
@@ -315,7 +314,7 @@ _V2_HV_SQL = "('0x' || substr(md5(CAST(q.doc_id AS VARCHAR)), 1, 15))::BIGINT"
     "in curriculum order. The per-(lang, stage) digest pins membership "
     "(id_sum), composition (n_docs, sum_chars), and ORDER (n_packs "
     "depends on the cumulative-char packing order within each lang). "
-    "Plan shape at 100 TB: survivors are pinned once and shingled once; "
+    "Plan shape at 100 TB: survivors are shingled once; "
     "candidate work is Σ|shingles| over LSH-banded candidates (never "
     "all-pairs); CC rides pinned iteration frames; the allocation frame "
     "is ≤ #languages rows (broadcast); ranks come from the two-pass "
@@ -337,11 +336,10 @@ def corpus_pipeline_v2_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         docs.join(kept, "doc_id", "semi")
         .select("doc_id", "text", "lang", "n_chars")
-        .transform(pin)
     )
     # verified MinHash dedup on the survivors: shingled ONCE, candidates
     # banded, Jaccard verified only on candidates, min-id keeper election
-    sh = D._doc_shingles(q, "text", 3).transform(pin)
+    sh = D._doc_shingles(q, "text", 3)
     sigs = D.minhash_signatures(q, num_hashes=_NUM_HASHES, shingles_df=sh)
     # bucket_cap (r14): linearizes the pre-verify multiplicity term on
     # duplicate-saturated corpora (the 128× capstone regime); a no-op on
@@ -353,7 +351,7 @@ def corpus_pipeline_v2_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_BANDS,
         signatures_df=sigs,
         bucket_cap=D.DEFAULT_BUCKET_CAP,
-    ).transform(pin)
+    )
     verified = D.verify_candidates(sh, cand, min_jaccard=0.5)
     edges = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     labels = D.connected_components_minlabel(edges, q.select("doc_id"))
@@ -364,10 +362,9 @@ def corpus_pipeline_v2_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = (
         q.join(keepers, "doc_id", "semi")
         .select("doc_id", "lang", "n_chars", hv.alias("hv"))
-        .transform(pin)
     )
     # largest-remainder mixture allocation across lang strata
-    strata = dd.groupBy("lang").agg(F.count("*").alias("n_h")).transform(pin)
+    strata = dd.groupBy("lang").agg(F.count("*").alias("n_h"))
     tot = strata.agg(F.sum("n_h").alias("n"))
     quota = strata.join(F.broadcast(tot)).select(
         "lang",
@@ -404,7 +401,7 @@ def corpus_pipeline_v2_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "n_chars", "hv")
     )
     # curriculum staging over the scale-safe two-pass global rank
-    pos = global_rank(sampled, ["n_chars", "doc_id"], out_col="rn_g").transform(pin)
+    pos = global_rank(sampled, ["n_chars", "doc_id"], out_col="rn_g")
     n = pos.agg(F.count("*").alias("n"))
     staged = pos.join(F.broadcast(n)).select(
         "doc_id",

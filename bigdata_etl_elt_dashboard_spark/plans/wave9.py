@@ -115,8 +115,7 @@ def ev_stream_pipeline_gold_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scale import pin
     from ..streaming.pipeline import sessions_gold_batch
 
-    # pinned ONCE: the frame feeds the replay union twice and the batch
-    # twin's session chain + terminal-watermark max — one parquet scan
+    # scan-budget: events scanned 4 times without it
     ev = table(spark, sf_dir, "events").select("user_id", "event_id", "ts").transform(pin)
     replay = ev.unionAll(ev.filter(F.col("event_id") % _REPLAY_MOD == 0))
     gold = sessions_gold_batch(replay, gap_ms=_GAP_MS)

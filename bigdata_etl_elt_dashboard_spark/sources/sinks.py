@@ -298,6 +298,8 @@ def merge_upsert_parquet(
     if strategy == "persist":  # lineage-keeping: unsafe for self-overwrite
         merged = merged.localCheckpoint(eager=True)
     else:
+        # freeze: the plan reads the files it overwrites
+        # (test_merge_upsert_rides_pin_policy_and_prunes_buckets)
         merged = pin(merged)
     overwrite_partitions(merged, path, ["_bucket"])
 

@@ -174,20 +174,33 @@ def test_resize_nearest_neighbor_exact():
     assert all(big.pixel(x, y) == (9, 8, 7) for x in range(3) for y in range(3))
 
 
-def test_decoder_is_pluggable():
-    """set_decoder swaps the decode path (the PIL/opencv hook)."""
-    calls = []
+def test_multimodal_module_ships_by_value(tmp_path):
+    """Python workers unpickle the mapInPandas closures. The multimodal
+    module is pickled by value, so a worker that cannot import this
+    package (another working directory, no PYTHONPATH) still decodes."""
+    import os
+    import subprocess
+    import sys
 
-    def fake_decoder(content: bytes) -> M.DecodedImage:
-        calls.append(content)
-        return M.DecodedImage(1, 1, b"\x00\x01\x02")
+    from pyspark import cloudpickle
 
-    try:
-        M.set_decoder(fake_decoder)
-        img = M.decode_image(b"anything")
-        assert img.pixel(0, 0) == (0, 1, 2) and calls == [b"anything"]
-    finally:
-        M.set_decoder(M.decode_auto)
+    blob = tmp_path / "decode.pkl"
+    blob.write_bytes(cloudpickle.dumps(M.decode_image))
+    img = M.encode_ppm(M.DecodedImage(1, 1, bytes((9, 8, 7))))
+    code = (
+        "import pickle, sys; f = pickle.load(open(sys.argv[1], 'rb')); "
+        "print(f(bytes.fromhex(sys.argv[2])).pixel(0, 0))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    p = subprocess.run(
+        [sys.executable, "-c", code, str(blob), img.hex()],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    assert p.stdout.strip() == "(9, 8, 7)"
 
 
 def test_decode_image_stats_spark(spark):

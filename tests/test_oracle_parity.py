@@ -3,9 +3,13 @@ DuckDB exactly at sf0.01 — the local mirror of the driver's t2 gate."""
 
 from __future__ import annotations
 
+import contextlib
+import time
+
 import pytest
 
 from bigdata_etl_elt_dashboard_spark.plans import REGISTRY
+from bigdata_etl_elt_dashboard_spark.sources.catalog import load_tables
 
 from .oracle_harness import compare, duck_connection
 
@@ -33,6 +37,163 @@ _WITH_ORACLE_PARAMS = _mark_slow(_WITH_ORACLE)
 _ROWS_ONLY_PARAMS = _mark_slow(_ROWS_ONLY)
 
 
+#: Queries allowed to start Spark jobs while ``fn(spark, sf)`` builds the
+#: DataFrame, before any collect — each with the reason its build needs a
+#: job. Every other query must build without one, and every query listed
+#: here must really start one, so a stale entry fails and the list can only
+#: shrink. Tags:
+#: - iteration: a loop pins or collects once per round (PageRank, k-core,
+#:   connected components, BPE, Lloyd, BFS);
+#: - freeze: a pin fixes partition ids, a range-sample boundary or files the
+#:   plan overwrites, which two branches must share;
+#: - scan-budget: a pin keeps the plan within test_plan_shapes' _SCAN_BUDGET
+#:   reads of one table, or runs a Python kernel once;
+#: - driver-value: the plan embeds a scalar collected on the driver (a
+#:   median, a codebook, histogram bounds);
+#: - streaming: the query drains a stream or writes a table to read back.
+BUILD_JOBS: dict[str, str] = {
+    # iteration
+    "corpus_pipeline_v2_digest": "iteration",
+    "dedup_apply_canonical": "iteration",
+    "dedup_cluster_size_hist": "iteration",
+    "dedup_clusters": "iteration",
+    "dedup_clusters_star": "iteration",
+    "dedup_quality_impact": "iteration",
+    "dedup_quality_keeper": "iteration",
+    "dedup_token_savings": "iteration",
+    "dedup_verified_keepers": "iteration",
+    "docs_bpe_apply_stats": "iteration",
+    "docs_bpe_train_merges": "iteration",
+    "docs_training_corpus": "iteration",
+    "graph_bfs_layers": "iteration",
+    "graph_kcore_peel": "iteration",
+    "graph_pagerank_3iter": "iteration",
+    "sim_kmeans_trajectory": "iteration",
+    "trend_haar_wavelet_energy": "iteration",
+    # freeze
+    "docs_curriculum_stages": "freeze",
+    "docs_rrf_rank_fusion": "freeze",
+    "docs_shuffle_order_digest": "freeze",
+    "scale_global_rank_orders": "freeze",
+    "supplier_pareto_cumshare_twopass": "freeze",
+    # scan-budget
+    "dedup_jaccard_pairs": "scan-budget",
+    "dedup_lsh_precision_recall": "scan-budget",
+    "dedup_lsh_scurve_validation": "scan-budget",
+    "dedup_method_agreement": "scan-budget",
+    "dedup_minhash_estimate_error": "scan-budget",
+    "dedup_threshold_sweep": "scan-budget",
+    "docs_data_card": "scan-budget",
+    "docs_ngram_containment": "scan-budget",
+    "docs_pipeline_e2e_digest": "scan-budget",
+    "docs_pmi_collocations": "scan-budget",
+    "dq_histogram_drift_l1": "scan-budget",
+    "emb_knn_graph_reciprocity": "scan-budget",
+    "emb_label_centroid_sim": "scan-budget",
+    "emb_prefix_dim_recall": "scan-budget",
+    "ev_click_view_full_twin": "scan-budget",
+    "ev_funnel_strict_steps": "scan-budget",
+    "ev_funnel_time_window": "scan-budget",
+    "ev_markov_3step_mass": "scan-budget",
+    "ev_replay_dedup_digest": "scan-budget",
+    "ev_stream_pipeline_gold_twin": "scan-budget",
+    "graph_clustering_coeff_hist": "scan-budget",
+    "graph_copurchase_triangles": "scan-budget",
+    "graph_degree_assortativity": "scan-budget",
+    "graph_degree_distribution": "scan-budget",
+    "graph_jaccard_link_prediction": "scan-budget",
+    "graph_katz_centrality_3step": "scan-budget",
+    "graph_ktruss_edge_support": "scan-budget",
+    "graph_label_propagation": "scan-budget",
+    "graph_rich_club_coefficient": "scan-budget",
+    "li_basket_type_lift": "scan-budget",
+    "li_value_share_parts": "scan-budget",
+    "li_value_share_topn": "scan-budget",
+    "part_pair_association_topk": "scan-budget",
+    "sim_ann_candidate_digest": "scan-budget",
+    "sim_ann_lsh": "scan-budget",
+    "sim_ann_multiprobe_gain": "scan-budget",
+    "sim_ann_recall_digest": "scan-budget",
+    "stat_approx_percentile_contract": "scan-budget",
+    "stat_bloom_customer_probe": "scan-budget",
+    "stat_mad_outlier_counts": "scan-budget",
+    "stat_mad_robust_outlier_days": "scan-budget",
+    "stat_mann_kendall_daily_revenue": "scan-budget",
+    "text_unigram_logprob": "scan-budget",
+    "trend_backtest_snaive_mase": "scan-budget",
+    "wh_merge_upsert_orders": "scan-budget",
+    # driver-value
+    "emb_pca_project": "driver-value",
+    "emb_pq_encode_stats": "driver-value",
+    "hist_totalprice_30bins": "driver-value",
+    "sim_assign_centroid": "driver-value",
+    "sim_ivf_cell_digest": "driver-value",
+    "sim_ivf_topk": "driver-value",
+    "sim_kmeans_lloyd1": "driver-value",
+    "text_tfidf_top_terms": "driver-value",
+    "tr_clip_iqr": "driver-value",
+    "tr_impute_median": "driver-value",
+    "tr_minmax_norm": "driver-value",
+    "tr_onehot_priority": "driver-value",
+    "tr_outlier_flag": "driver-value",
+    # streaming
+    "src_bucketed_join_digest": "streaming",
+    "src_codec_roundtrip_digest": "streaming",
+    "src_compaction_digest": "streaming",
+    "src_csv_malformed_recovery_digest": "streaming",
+    "src_csv_roundtrip_digest": "streaming",
+    "src_dynamic_partition_overwrite_digest": "streaming",
+    "src_join_state_digest": "streaming",
+    "src_jsonl_roundtrip_digest": "streaming",
+    "src_merge_upsert_digest": "streaming",
+    "src_orc_roundtrip_digest": "streaming",
+    "src_partitioned_prune_digest": "streaming",
+    "src_schema_evolution_digest": "streaming",
+    "src_session_migration_digest": "streaming",
+    "src_state_reader_digest": "streaming",
+    "src_table_roundtrip_digest": "streaming",
+    "src_tws_state_digest": "streaming",
+    "wh_write_audit_publish_digest": "streaming",
+}
+
+
+@contextlib.contextmanager
+def _build_jobs(spark, sf_dir: str, name: str):
+    """Run the body under a job group of its own; yield a list that holds
+    the ids of the jobs it started once the body is done. The catalog's
+    tables are loaded first, so the one-off parquet schema job of a
+    table's first read in the session is never counted."""
+    load_tables(spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, f"build {name}")
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs.extend(tracker.getJobIdsForGroup(group))
+    # the status store is fed asynchronously by the listener bus
+    deadline = time.monotonic() + 5
+    while not jobs and name in BUILD_JOBS and time.monotonic() < deadline:
+        time.sleep(0.05)
+        jobs.extend(tracker.getJobIdsForGroup(group))
+
+
+def _check_build_jobs(name: str, jobs: list[int]) -> None:
+    if name in BUILD_JOBS:
+        assert jobs, (
+            f"{name} starts no job at build any more: delete its BUILD_JOBS entry"
+        )
+    else:
+        assert not jobs, (
+            f"{name} started {len(jobs)} Spark job(s) while being built; "
+            "a frame used twice needs no pin (see operators/scale.pin)"
+        )
+
+
 @pytest.fixture(scope="module")
 def duck(sf_oracle):
     con = duck_connection(sf_oracle)
@@ -50,9 +211,11 @@ def duck_smoke(sf_smoke):
 @pytest.mark.parametrize("name", _WITH_ORACLE_PARAMS)
 def test_oracle_match(spark, sf_oracle, duck, name):
     q = REGISTRY[name]
-    df = q.fn(spark, sf_oracle)
+    with _build_jobs(spark, sf_oracle, name) as jobs:
+        df = q.fn(spark, sf_oracle)
     report = compare(df, duck, q.oracle)
     assert report["ok"], f"{name}: {report['mismatches']}"
+    _check_build_jobs(name, jobs)
 
 
 def test_driver_gate_window_order_is_pinned():
@@ -109,10 +272,18 @@ def test_harness_is_type_strict():
 @pytest.mark.parametrize("name", _ROWS_ONLY_PARAMS)
 def test_rows_only_runs(spark, sf_oracle, name):
     q = REGISTRY[name]
-    df = q.fn(spark, sf_oracle)
+    with _build_jobs(spark, sf_oracle, name) as jobs:
+        df = q.fn(spark, sf_oracle)
     n = df.count()
     assert n >= 0
     assert df.columns  # stable schema exists
+    _check_build_jobs(name, jobs)
+
+
+def test_build_jobs_allow_list_names_registered_queries():
+    assert sorted(set(BUILD_JOBS) - set(REGISTRY)) == []
+    tags = {"iteration", "freeze", "scan-budget", "driver-value", "streaming"}
+    assert {n: t for n, t in BUILD_JOBS.items() if t not in tags} == {}
 
 
 # ---------------------------------------------------------------------------

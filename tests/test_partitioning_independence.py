@@ -62,8 +62,8 @@ _QUERIES = [
     "li_pareto_cum_share",  # ordered cumulative vs window totals
     "stat_weekly_dft_power",  # literal weight table + exact projections
     "scale_zorder_file_skipping",  # global NTILE total orders, bit ops
-    # round 7: the composed verify->CC pipeline (pinned shingle stream,
-    # iterative min-label loop), the two-pass shuffle-order digest whose
+    # round 7: the composed verify->CC pipeline (iterative min-label
+    # loop), the two-pass shuffle-order digest whose
     # permutation must not depend on partitioning, the NTILE closed form
     # over global_rank, the fixed-order IEEE RRF score, the q1 8-aggregate
     # single-shuffle rollup, and the largest-remainder allocation whose

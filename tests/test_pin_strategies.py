@@ -23,10 +23,11 @@ from bigdata_etl_elt_dashboard_spark.plans import REGISTRY
 
 # queries whose plans route through pin(): one iterative (per-round
 # pinning), one multi-branch (frozen partition ids), one corpus DAG
+# (scan-budget pin of its shingle stream)
 _PINNED_QUERIES = [
     "graph_pagerank_3iter",
     "scale_global_rank_orders",
-    "docs_span_contamination",
+    "docs_ngram_containment",
 ]
 
 

@@ -9,11 +9,20 @@ companion NEGATIVE checks (no cartesian product, no unbounded
 nested-loop join, no Python row-UDF stage) are enforced by
 ``tests/test_plan_shapes.py::test_registry_plan_lint``; this artifact is
 the POSITIVE evidence — what each plan actually does.
+
+Node counts cannot see a change inside a node (a dropped Filter conjunct,
+a renamed column), so each row also carries ``digest``: a hash of the
+query's optimized logical plan plus its physical plan, with expression
+ids, plan ids and file locations normalized. Two trees give the same
+digest for a query when its normalized plans match, so the PLANS.md diff
+names every query a change touched. Digests depend on the session's
+parallelism (split counts, fan-out), so compare runs from one host.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import os
 import re
@@ -47,6 +56,30 @@ def tree_section(plan: str) -> str:
     return plan.split("\n\n", 1)[0]
 
 
+#: run-specific tokens in explain text, replaced before hashing; a file
+#: location keeps only a ``*.parquet`` table name (temp dirs are random)
+_VOLATILE = [
+    (re.compile(r"#\d+L?"), "#"),  # expression / exchange ids
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (
+        re.compile(r"(?:file:)?(?:/[^/\s,\]\[()]+)+"),
+        lambda m: "<dir>/" + m[0].rsplit("/", 1)[1] if m[0].endswith(".parquet") else "<path>",
+    ),
+]
+
+
+def plan_digest(df) -> str:
+    """12-hex digest of the normalized optimized logical + physical plan."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("extended")
+    text = buf.getvalue()
+    text = text[text.index("== Optimized Logical Plan ==") :]
+    for pat, rep in _VOLATILE:
+        text = pat.sub(rep, text)
+    return hashlib.sha256(text.encode()).hexdigest()[:12]
+
+
 def main() -> None:
     spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
     rows = []
@@ -57,6 +90,7 @@ def main() -> None:
             df.explain("formatted")
         tree = tree_section(buf.getvalue())
         counts = [len(re.findall(pat, tree)) for _, pat in NODE_COUNTS]
+        digest = plan_digest(df)
         # codegen span count: distinct *(N) ids in the simple-mode tree.
         # AQE hides them behind AdaptiveSparkPlan until execution, so the
         # codegen readout uses a non-adaptive replan of the same query.
@@ -68,7 +102,7 @@ def main() -> None:
             codegen = len(set(re.findall(r"\*\((\d+)\)", buf.getvalue())))
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
-        rows.append((name, counts, codegen))
+        rows.append((name, counts, codegen, digest))
 
     headers = [h for h, _ in NODE_COUNTS]
     lines = [
@@ -81,14 +115,17 @@ def main() -> None:
         "broadcast side, enforced by the registry plan lint). exch counts",
         "shuffle/broadcast exchanges before AQE coalescing; pyarrow counts",
         "Arrow-batched Python stages (multimodal operators only); cg is",
-        "distinct whole-stage-codegen spans.",
+        "distinct whole-stage-codegen spans. digest hashes the normalized",
+        "optimized logical + physical plan (see the tool's docstring).",
         "",
-        "| query | " + " | ".join(headers) + " | cg |",
-        "|---|" + "---|" * (len(headers) + 1),
+        "| query | " + " | ".join(headers) + " | cg | digest |",
+        "|---|" + "---|" * (len(headers) + 2),
     ]
-    for name, counts, codegen in rows:
+    for name, counts, codegen, digest in rows:
         lines.append(
-            f"| `{name}` | " + " | ".join(str(c) for c in counts) + f" | {codegen} |"
+            f"| `{name}` | "
+            + " | ".join(str(c) for c in counts)
+            + f" | {codegen} | {digest} |"
         )
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as f:

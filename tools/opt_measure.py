@@ -4,7 +4,7 @@
 For each named registry query this captures, in ONE tuned session
 (bench.py posture: local[$SPARK_GRAFT_CPUS], 8 shuffle partitions, UI off):
 
-- ``plans/r14/<name>_<suffix>.txt`` — the formatted explain output (the
+- ``plans/explain/<name>_<suffix>.txt`` — the formatted explain output (the
   judge-checkable plan evidence for before/after claims);
 - ``plan_s``   — one-time analysis + first materialization (collect), the
   same definition bench.py reports;
@@ -18,7 +18,7 @@ For each named registry query this captures, in ONE tuned session
 
 Usage:
   python tools/opt_measure.py --suffix before [--names q1 ...]
-         [--sf /root/testdata/sf0.1] [--runs 5] [--out plans/r14]
+         [--sf /root/testdata/sf0.1] [--runs 5] [--out plans/explain]
          [--json /tmp/opt_before.json] [--no-explain]
 
 Default name set = the bench HEADLINE + EXTENSION_SUITE (everything the
@@ -76,7 +76,7 @@ def main() -> None:
     ap.add_argument("--names", nargs="*", default=None)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=5)
-    ap.add_argument("--out", default=os.path.join(_ROOT, "plans", "r14"))
+    ap.add_argument("--out", default=os.path.join(_ROOT, "plans", "explain"))
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--json", default=None)
     ap.add_argument("--no-explain", action="store_true")
